@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.etl.Pipeline
 
 /** Apples-to-apples baseline twin of tools/baseline_ref_timing.py: runs
@@ -19,25 +17,15 @@ object BaselineGastos {
     val bronze =
       if (args.nonEmpty) args(0)
       else "/root/reference/proj-eng-dados/dataset/bronze"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
+    require(java.nio.file.Files.isDirectory(java.nio.file.Paths.get(bronze)),
+      s"usage: BaselineGastos [bronzeDir]; no bronze layer at $bronze")
+    val spark = Harness.session(Harness.confs(Harness.cpus(4),
+      "spark.sql.adaptive.enabled" -> "true",
       // the bronze/silver layers are ~84 hive dirs of tiny files: above
       // the default 32-dir threshold Spark launches a DISTRIBUTED
       // listing job per read, which costs more than driver-side listing
       // on a local filesystem at this size
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "1024")
-      // 128m default kept after an A/B (round 8): 1g packs the 840
-      // tiny bronze files into fewer-than-core-count scan tasks and
-      // measured consistently WORSE (7.4-8.2 s vs 6.0-6.6 s same-day)
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAXPART", "128m"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      "spark.sql.sources.parallelPartitionDiscovery.threshold" -> "1024"))
 
     def timeStages(): (Double, Double, Long) = {
       val out = java.nio.file.Files.createTempDirectory("graft-baseline")
@@ -57,18 +45,12 @@ object BaselineGastos {
         require(goldRows > 0, "gold produced no rows — run failed")
         (times(0), times(1), goldRows)
       } finally {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        rm(out.toFile)
+        Harness.deleteRecursively(out.toFile)
       }
     }
     val runs = Seq.fill(2)(timeStages())
     val (silverS, goldS, goldRows) = runs.minBy(r => r._1 + r._2)
-    // Locale.ROOT: the f interpolator is locale-sensitive, and a comma
-    // decimal separator would make this line invalid JSON
-    def s2(x: Double): String =
-      String.format(java.util.Locale.ROOT, "%.2f", Double.box(x))
+    def s2(x: Double): String = Harness.num(x, 2)
     println(
       s"""{"graft_silver_s": ${s2(silverS)}, "graft_gold_s": ${s2(goldS)}, """ +
         s""""graft_total_s": ${s2(silverS + goldS)}, "gold_rows": $goldRows}""")

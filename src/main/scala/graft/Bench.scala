@@ -1,36 +1,20 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Per-round benchmark main: runs every registered query against
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line with per-query seconds.
-  *
-  * Each query is forced by hashing EVERY output column into one
-  * xxhash64 and bit_xor-folding to a single row (driver receives 8
-  * bytes). `.count()` — the action used through round 9 — is NOT
-  * evaluation-complete: Catalyst prunes deterministic projections the
-  * count doesn't need (t01's whole langid CASE tree never ran:
-  * 0.14 s "measured" vs 1.24 s real at sf0.1) and eliminates left
-  * joins onto groupBy-keyed aggregates (d45's entire span pipeline
-  * collapsed to a parquet row count). Aggregate/join-shaped queries
-  * were unaffected (their work is below the count), but the
-  * projection family was measured at 3–14× below its true cost —
-  * the round-10 re-baseline in BASELINE.md quantifies the shift.
-  * bit_xor, not sum: ANSI mode (Spark 4 default) throws on long
-  * overflow, and xor-fold consumes values just as completely.
+  * Each query is forced with [[Harness.force]], the
+  * evaluation-complete hash fold (`.count()`, the action used through
+  * round 9, measured the projection family at 3–14× below its true
+  * cost).
   */
 object Bench {
+  /** The driver contract: exactly these confs, nothing else. */
+  def confs(cpus: Int): Map[String, String] =
+    Harness.confs(cpus, "spark.sql.adaptive.enabled" -> "true")
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(confs(Harness.cpus(4)))
     // JIT/codegen warmup on the smallest SF so per-query numbers measure
     // the plan, not first-call classloading.
     try SparkEntry.entry(spark).count() catch { case _: Throwable => () }
@@ -39,15 +23,9 @@ object Bench {
     // A failed query must NOT report its (tiny) failure wall time as a
     // benchmark number — that would make a plan regression look like a
     // speedup. Failures surface as -1 and are excluded from the total.
-    import org.apache.spark.sql.functions.{col, expr, struct, xxhash64}
-    def force(df: org.apache.spark.sql.DataFrame): Unit = {
-      df.select(xxhash64(struct(df.columns.map(col): _*)).as("_h"))
-        .agg(expr("bit_xor(_h)")).collect()
-      ()
-    }
     def timeOnce(fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       val t0 = System.nanoTime()
-      try { force(fn(spark, sfDir)); (System.nanoTime() - t0) / 1e9 }
+      try { Harness.force(fn(spark, sfDir)); (System.nanoTime() - t0) / 1e9 }
       catch { case _: Throwable => -1.0 }
     }
     def merge(a: Double, b: Double): Double =
@@ -65,10 +43,7 @@ object Bench {
     val failed = results.filter(_._2 < 0).map(_._1)
     if (failed.nonEmpty)
       System.err.println(s"[bench] FAILED queries (reported as -1): ${failed.mkString(", ")}")
-    // Locale.ROOT: the f interpolator is locale-sensitive — a comma
-    // decimal separator would make the parseable line invalid JSON
-    def num(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+    import Harness.num
     def jsonMap(rs: Seq[(String, Double)]): String =
       rs.map { case (k, v) => "\"" + k + "\":" + num(v) }.mkString("{", ",", "}")
     val total = results.map(_._2).filter(_ >= 0).sum

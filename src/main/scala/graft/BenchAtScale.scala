@@ -34,7 +34,7 @@ object BenchAtScale {
       if (args.length > 2) args.drop(2).toSeq
       else Seq("q60_recursive_cte", "d11_contamination", "d15_jaccard_verify",
         "t06_top_terms", "d29_bpe_train", "d30_bpe_encode")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = Harness.cpus(4)
     // Shuffle partitions default to the core count (the bench config),
     // but at 100× some single stages carry ~10⁹ intermediate rows (g24's
     // wedge agg) — 24 partitions put ~40M rows through each final
@@ -44,20 +44,11 @@ object BenchAtScale {
     // harness. AQE coalesces over-split stages for the light queries,
     // so a high value is safe across a mixed batch.
     val shufflePartitions =
-      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      // q60's recursion emits one row per orders row; the default
-      // guardrail (1M rows) trips at 10× sf0.1's 1.5M orders — the
-      // limit is a safety net against runaway recursion, not a plan
-      // property, so the pressure test raises it to cover the corpus
-      .config("spark.sql.cteRecursionRowLimit", (50 * 1000 * 1000).toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus.toString)
+    val spark = Harness.session(Harness.confs(cpus,
+      "spark.sql.shuffle.partitions" -> shufflePartitions,
+      "spark.sql.adaptive.enabled" -> "true",
+      Harness.cteRecursionRowLimit))
 
     // a _COMPLETE marker (written last) gates reuse: an interrupted
     // build — documents written, orders not — must rebuild, not crash
@@ -105,32 +96,21 @@ object BenchAtScale {
       java.nio.file.Files.write(donePath, s"copies=$copies\n".getBytes("UTF-8"))
     }
 
-    // evaluation-complete force (hash every output column, xor-fold to
-    // one row) — same action as Bench; .count() lets Catalyst prune
-    // deterministic projections and eliminate left joins onto keyed
-    // aggregates, silently skipping the work being measured
-    def force(df: DataFrame): Unit = {
-      df.select(xxhash64(struct(df.columns.map(col): _*)).as("_h"))
-        .agg(expr("bit_xor(_h)")).collect()
-      ()
-    }
     def timeOnce(fn: (SparkSession, String) => DataFrame): Double = {
       val t0 = System.nanoTime()
-      force(fn(spark, outDir))
+      Harness.force(fn(spark, outDir))
       (System.nanoTime() - t0) / 1e9
     }
     // warmup on the source SF (codegen/classload), then two timed runs
     // with the Bench cache-hygiene barrier between them
-    force(SparkEntry.queries(names.head)(spark, srcDir))
+    Harness.force(SparkEntry.queries(names.head)(spark, srcDir))
     val results = names.map { n =>
       val fn = SparkEntry.queries(n)
       val a = timeOnce(fn)
       spark.catalog.clearCache()
       n -> math.min(a, timeOnce(fn))
     }
-    def num(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    val line = results.map { case (k, v) => "\"" + k + "\":" + num(v) }
+    val line = results.map { case (k, v) => "\"" + k + "\":" + Harness.num(v) }
       .mkString(s"""{"metric":"scale${copies}x","unit":"sec","queries":{""", ",", "},")
     spark.stop()
     println(line + s""""src":"$srcDir"}""")

@@ -21,9 +21,9 @@ import org.apache.spark.sql.SparkSession
   *     the 200 default (a local/parallelism-proportional count; on a
   *     real cluster pass the executor-core total).
   *
-  * The harness mains (Bench/Verify/…) keep their own builders — their
-  * configs are part of the measured/driver contract — but set the same
-  * keys; this entry point is for LIBRARY users. */
+  * The harness mains (Bench/Verify/…) build their sessions through
+  * [[Harness]] — their confs are part of the measured/driver contract;
+  * this entry point is for LIBRARY users. */
 object GraftSession {
 
   /** Recommended session. `parallelism` sizes both the local-fallback

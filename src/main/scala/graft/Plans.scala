@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: dump the formatted physical plan of selected queries (all
   * when no args) so plan regressions — lost pushdown, surprise shuffle,
   * broadcast that became a sort-merge join — are visible in review.
@@ -11,13 +9,7 @@ object Plans {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val names = if (args.length > 1) args.tail.toSeq else SparkEntry.queries.keys.toSeq.sorted
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session(Harness.confs(4), logLevel = "ERROR")
     names.foreach { name =>
       println(s"\n=== $name ===")
       try SparkEntry.queries(name)(spark, sfDir).explain("formatted")

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Full-consistency scaled corpus for the ORACLE GATE at sf1-equivalent
@@ -39,15 +39,8 @@ object ScaleCorpus {
     val srcDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val copies = if (args.length > 1) args(1).toInt else 10
     val outDir = if (args.length > 0) args(0) else CorpusPaths.sfgate(copies)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(Harness.confs(Harness.cpus(8),
+      "spark.sql.adaptive.enabled" -> "true"))
 
     val donePath = java.nio.file.Paths.get(s"$outDir/_COMPLETE")
     if (java.nio.file.Files.exists(donePath)) {

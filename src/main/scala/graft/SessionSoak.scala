@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import graft.streaming.{StreamOps, TwsOps}
 
@@ -37,16 +36,9 @@ object SessionSoak {
     val horizonDays = if (args.length > 2) args(2).toInt else 1
     require(days >= horizonDays + 3,
       s"need days >= horizonDays + 3 for the plateau window, got days=$days")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.sql.streaming.numRecentProgressUpdates", (days * 2 + 8).toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(Harness.confs(Harness.cpus(8),
+      "spark.sql.adaptive.enabled" -> "false",
+      "spark.sql.streaming.numRecentProgressUpdates" -> (days * 2 + 8).toString))
     StreamOps.withRocksDBStateStore(spark)
     import spark.implicits._
 
@@ -111,7 +103,7 @@ object SessionSoak {
     println(s"""{"metric":"session_soak","keys":$keys,"days":$days,""" +
       s""""horizon_days":$horizonDays,"rows_by_day":[${ladder.map(_._1).mkString(",")}],""" +
       s""""emitted":$emitted,"expected_emitted":$expectedEmitted,""" +
-      s""""peak_rows":$peak,"wall_sec":${f"$wall%.1f"},"ok":$ok}""")
+      s""""peak_rows":$peak,"wall_sec":${Harness.num(wall, 1)},"ok":$ok}""")
     if (!ok) sys.exit(1)
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Adversarial-skew pressure harness: every scaled corpus so far
@@ -89,15 +89,8 @@ object SkewCorpus {
         "q70_skew_report")
     val uniformDir = CorpusPaths.sfscale(copies)
     val skewDir = CorpusPaths.sfskew(copies, headTag)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(Harness.confs(Harness.cpus(4),
+      "spark.sql.adaptive.enabled" -> "true"))
 
     def smallest3(df: DataFrame, c: String): Seq[Long] =
       df.select(col(c).cast("long")).distinct().orderBy(col(c)).limit(3)
@@ -164,24 +157,18 @@ object SkewCorpus {
     }
 
     // ---- interleaved A/B (the Bench force + hygiene rules) ----
-    def force(df: DataFrame): Unit = {
-      df.select(xxhash64(struct(df.columns.map(col): _*)).as("_h"))
-        .agg(expr("bit_xor(_h)")).collect()
-      ()
-    }
     def timeOn(name: String, dir: String): Double = {
       val fn = SparkEntry.queries(name)
       def once: Double = {
         val t0 = System.nanoTime()
-        force(fn(spark, dir)); (System.nanoTime() - t0) / 1e9
+        Harness.force(fn(spark, dir)); (System.nanoTime() - t0) / 1e9
       }
       val a = once
       spark.catalog.clearCache()
       math.min(a, once)
     }
-    force(SparkEntry.queries(names.head)(spark, srcDir)) // warmup at source SF
-    def num(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+    Harness.force(SparkEntry.queries(names.head)(spark, srcDir)) // warmup at source SF
+    import Harness.num
     val rows = names.map { n =>
       val u = timeOn(n, uniformDir)
       spark.catalog.clearCache()

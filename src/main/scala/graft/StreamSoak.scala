@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import graft.streaming.StreamOps
 
@@ -47,21 +46,14 @@ object StreamSoak {
     require(days >= horizonDays + 2,
       s"need days >= horizonDays + 2 for the plateau/seal assertions, " +
         s"got days=$days horizonDays=$horizonDays")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "false") // streaming: AQE is inert, keep plans stable
+    val spark = Harness.session(Harness.confs(Harness.cpus(8),
+      "spark.sql.adaptive.enabled" -> "false", // streaming: AQE is inert, keep plans stable
       // removedTotal sums numRowsRemoved over recentProgress, which
       // retains only the last N progress reports (default 100 — a
       // >~50-day soak would silently undercount eviction and FAIL the
       // assertion against the engine); retain every batch of the run
       // (2 per day per op, plus slack)
-      .config("spark.sql.streaming.numRecentProgressUpdates", (days * 2 + 8).toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      "spark.sql.streaming.numRecentProgressUpdates" -> (days * 2 + 8).toString))
     StreamOps.withRocksDBStateStore(spark)
     import spark.implicits._
 
@@ -159,13 +151,11 @@ object StreamSoak {
         s"peakMemMB=${r.peakMemBytes / 1024 / 1024} wall=${f"${r.wallSec}%.1f"}s " +
         s"plateau=$plateauOk evict=$evictOk bound=$boundOk")
     }
-    def num(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.1f", Double.box(v))
     val line = reports.map { r =>
       s""""${r.name}":{"rows_by_day":[${r.rowsByDay.mkString(",")}],""" +
         s""""removed":${r.removedTotal},"peak_rows":${r.peakRows},""" +
         s""""final_rows":${r.finalRows},"peak_mem_mb":${r.peakMemBytes / 1024 / 1024},""" +
-        s""""wall_sec":${num(r.wallSec)}}"""
+        s""""wall_sec":${Harness.num(r.wallSec, 1)}}"""
     }.mkString(s"""{"metric":"stream_soak","keys":$keys,"days":$days,""" +
       s""""horizon_days":$horizonDays,"ok":${!failed},"ops":{""", ",", "}}")
     spark.stop()

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
 import graft.streaming.{StreamOps, TwsOps}
@@ -34,15 +33,8 @@ object TwsSoak {
     // early window = batches 3..5, late = last 3: DISJOINT needs >= 9
     // (at 8 they would share batch 5 and self-correlate the growth ratio)
     require(batches >= 9, s"need >= 9 batches for disjoint early/late windows, got $batches")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(Harness.confs(Harness.cpus(8),
+      "spark.sql.adaptive.enabled" -> "false"))
     StreamOps.withRocksDBStateStore(spark)
     import spark.implicits._
 
@@ -125,8 +117,7 @@ object TwsSoak {
     val (gT, gM) = (growth(twsLadder), growth(mgwsLadder))
     val okCorrect = twsEmitted == expected && mgwsEmitted == expected
     val okContrast = gM > gT && gT < 4.0
-    def num(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
+    def num(v: Double): String = Harness.num(v, 2)
     System.err.println(s"[tws-soak] tws=${twsLadder.map(num).mkString(",")}")
     System.err.println(s"[tws-soak] mgws=${mgwsLadder.map(num).mkString(",")}")
     System.err.println(s"[tws-soak] growth tws=${num(gT)} mgws=${num(gM)} " +

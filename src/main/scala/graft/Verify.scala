@@ -1,9 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+  def confs(cpus: Int): Map[String, String] =
+    Harness.confs(cpus, Harness.cteRecursionRowLimit)
+
   def main(args: Array[String]): Unit = {
     // optional 3rd arg: comma-separated query names — the targeted
     // standalone compare used while iterating (the driver always calls
@@ -21,19 +23,7 @@ object Verify {
       require(unknown.isEmpty,
         s"unknown query name(s): ${unknown.toSeq.sorted.mkString(", ")}")
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // q60's recursion emits one row per orders row; the default 1M-row
-      // guardrail trips on a gate corpus ≥ ~sf0.7 (it's a safety net
-      // against runaway recursion, not a plan property — BenchAtScale
-      // raises it for the same reason)
-      .config("spark.sql.cteRecursionRowLimit", (50 * 1000 * 1000).toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(confs(Harness.cpus(4)))
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
@@ -43,10 +33,7 @@ object Verify {
       catch { case e: Throwable =>
         // remove any previous/partial output: a stale result from an
         // earlier run would silently pass the driver's oracle compare
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        rm(new java.io.File(s"$outDir/$name"))
+        Harness.deleteRecursively(new java.io.File(s"$outDir/$name"))
         System.err.println(s"[verify] $name failed: $e")
       }
     }

@@ -382,8 +382,8 @@ object Dedup {
     // the gram sets into a (doc, md5-string) stream and recovered
     // n_shared with two stream joins + a pair-keyed count aggregate +
     // a left join + two count joins — five joins and an exchange of
-    // the full matched-gram stream per verify (OptProbe: d70 verify
-    // 6.0 → 3.7 s at sf0.1/32c). n_shared is identical: grams are
+    // the full matched-gram stream per verify (OPTIMIZATION_r14.md
+    // S2-1: d70 verify 6.0 → 3.7 s at sf0.1/32c). n_shared is identical: grams are
     // distinct per doc (withShingles), so matching-hash count =
     // |gram-set ∩| under collision-freeness — the same contract the
     // md5-keyed join relied on.
@@ -726,8 +726,8 @@ object Dedup {
     // AQE-skew-split; a window partition cannot — but the per-src row
     // concentration is inherent to the algorithm (the reduce owns the
     // node's full current neighbourhood either way), and the window
-    // drops a full join stage per step (OptProbe: 8.5-8.9 -> 4.9-5.5 s
-    // steady at sf0.1/32c).
+    // drops a full join stage per step (OPTIMIZATION_r14.md S2-3:
+    // 8.5-8.9 -> 4.9-5.5 s steady at sf0.1/32c).
     val wSrc = Window.partitionBy(col("src"))
     while (!stars && iter < maxIter) {
       // large-star over the symmetric adjacency

@@ -1316,120 +1316,6 @@ object Graph {
       greatest(col("src"), col("dst")).as("v"), col("support"))
   }
 
-  /** DECREMENTAL k-truss peel — [[kTruss]] with per-round support
-    * maintenance instead of full recomputation: the full
-    * [[edgeSupport]] intersection pass runs ONCE, and each subsequent
-    * round only enumerates the triangles DESTROYED by that round's
-    * removals (w ∈ N(u) ∩ N(v) per removed edge (u,v), over the
-    * pre-removal adjacency), deduplicates them (a triangle holding
-    * two removed edges is found twice but died once —
-    * sort_array + distinct on the (a,b,c) triple), and decrements the
-    * kept edges' supports by their destroyed-triangle count:
-    * support_new(f) = support_old(f) − #destroyed triangles on f,
-    * exactly (triangles only ever disappear during a peel). Same
-    * per-round removal sets, same rounds, same fixpoint, bit-equal
-    * output to [[kTruss]] — spec-asserted on the real co-purchase
-    * graph with the delta path forced every round.
-    *
-    * MEASURED AND NOT SHIPPED (the g07 ship-only-if-it-wins
-    * discipline, round 12): interleaved A/B vs [[kTruss]] at the
-    * g15 dials (k=10, 10 rounds) reads **0.13× on the 10×-skew
-    * instance** (full 52.3 s, delta 403.4 s) and 0.97× on uniform 10×
-    * (22.2 vs 22.9 s) — hash-equal both times. The loss mechanism:
-    * destroyed-triangle enumeration intersects UNDIRECTED
-    * neighbourhoods, so every removed edge incident to a hub pays
-    * O(deg(hub)) — on the densified skew instance (8.95M edges, hub
-    * degrees in the 10⁵ range, tens of thousands of removals per
-    * round) that is quadratic-ish in the hub, while the full pass's
-    * DEGREE-ORIENTED engine amortizes the same triangles inside the
-    * O(m·√m) bound. Delta would win only where per-round removals AND
-    * max degree are both small — no instance in this corpus family.
-    * g15 stays on [[kTruss]]; this op is kept as the spec's
-    * independent cross-check (three implementations, one answer:
-    * delta-forced, full-forced, and kTruss agree bit-for-bit on the
-    * real co-purchase graph).
-    *
-    * Scale shape (when it applies): round 1 is the g01 O(m·√m)
-    * intersection bound; each later round is one O(m) adjacency
-    * rebuild + intersections only on the removed edges. A round
-    * removing more than `fullRecomputeFrac` of the surviving edges
-    * auto-dispatches back to the full [[edgeSupport]] pass (both
-    * branches compute the same table). */
-  def kTrussDelta(edges: DataFrame, k: Int, maxIter: Int = 10,
-      strict: Boolean = true, fullRecomputeFrac: Double = 0.25): DataFrame = {
-    require(k >= 3, s"k must be >= 3 for a non-trivial truss, got $k")
-    require(maxIter >= 1, s"maxIter must be >= 1, got $maxIter")
-    require(fullRecomputeFrac >= 0.0 && fullRecomputeFrac <= 1.0,
-      s"fullRecomputeFrac must be in [0,1], got $fullRecomputeFrac")
-    val thr = (k - 2).toLong
-    var sup = edgeSupport(edges.select(col("u"), col("v")))
-      .localCheckpoint(true)
-    var n = sup.count()
-    var out: DataFrame = null
-    var converged = false
-    var iter = 1 // pass i filters the support-in-graph_{i-1} table
-    // the ONE hand-rolled loop left in this file, by design: its state
-    // is (support table, removal set, dispatch decision) with a
-    // mid-round branch back to the full pass — the three-door harness
-    // would need a fourth door for exactly one caller. Budget +
-    // strict-throw below mirror iterateToFixpoint's contract.
-    while (out == null) {
-      val removed = sup.where(col("support") < thr)
-        .select(col("u"), col("v")).localCheckpoint(true)
-      val nRem = removed.count()
-      if (nRem == 0L) { converged = true; out = sup }
-      else {
-        val kept = sup.where(col("support") >= thr).localCheckpoint(true)
-        if (iter == maxIter) out = kept // budget spent; strict judges below
-        else {
-          sup =
-            if (nRem.toDouble > fullRecomputeFrac * n)
-              edgeSupport(kept.select(col("u"), col("v"))).localCheckpoint(true)
-            else {
-              // pre-removal adjacency: kept ∪ removed IS graph_{i-1}
-              val pre = kept.select(col("u"), col("v")).unionByName(removed)
-              val adj = pre.select(col("u").as("s"), col("v").as("t"))
-                .unionByName(pre.select(col("v").as("s"), col("u").as("t")))
-                .groupBy(col("s"))
-                .agg(sort_array(collect_list(col("t"))).as("_nbrs"))
-                .localCheckpoint(true)
-              val destroyed = removed
-                .join(adj.select(col("s").as("u"), col("_nbrs").as("_nu"))
-                  .hint("shuffle_hash"), "u")
-                .join(adj.select(col("s").as("v"), col("_nbrs").as("_nv"))
-                  .hint("shuffle_hash"), "v")
-                .select(col("u"), col("v"),
-                  explode(array_intersect(col("_nu"), col("_nv"))).as("w"))
-                .select(sort_array(array(col("u"), col("v"), col("w"))).as("_t"))
-                .distinct()
-              val dec = destroyed
-                .select(explode(array(
-                  struct(element_at(col("_t"), 1).as("u"),
-                    element_at(col("_t"), 2).as("v")),
-                  struct(element_at(col("_t"), 1).as("u"),
-                    element_at(col("_t"), 3).as("v")),
-                  struct(element_at(col("_t"), 2).as("u"),
-                    element_at(col("_t"), 3).as("v")))).as("_e"))
-                .select(col("_e.u").as("u"), col("_e.v").as("v"))
-                .groupBy(col("u"), col("v")).agg(count(lit(1)).as("_dec"))
-              kept.join(dec, Seq("u", "v"), "left")
-                .select(col("u"), col("v"),
-                  (col("support") - coalesce(col("_dec"), lit(0L)))
-                    .as("support"))
-                .localCheckpoint(true)
-            }
-          n = n - nRem
-          iter += 1
-        }
-      }
-    }
-    if (strict && !converged)
-      throw new IllegalStateException(
-        s"kTrussDelta did not reach fixpoint in $maxIter rounds — raise " +
-          "maxIter (the oracle unroll must move with it) or lower k")
-    out
-  }
-
   /** Degree assortativity (Newman 2002): the Pearson correlation of
     * endpoint degrees over every directed STUB (both orientations of
     * each undirected edge — the standard stub convention, which makes

@@ -369,37 +369,22 @@ class GraphSpec extends SparkSpec {
     assert(partial == Set((1L, 2L, 2L)))
   }
 
-  test("kTrussDelta bit-equals kTruss: cascade fixture, strict/non-strict contract, and the real co-purchase graph with the delta path forced") {
-    def canon(df: org.apache.spark.sql.DataFrame) =
-      df.as[(Long, Long, Long)].collect().toSet
-    // the K4-minus-an-edge cascade: every round's removal set and the
-    // empty fixpoint must match round for round (delta forced on)
-    val e = Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L)).toDF("u", "v")
-    assert(Graph.kTrussDelta(e, k = 4, maxIter = 5,
-      fullRecomputeFrac = 0.0).isEmpty)
-    assert(canon(Graph.kTrussDelta(e, k = 3, maxIter = 5,
-        fullRecomputeFrac = 0.0)) ==
-      canon(Graph.kTruss(e, k = 3, maxIter = 5)))
-    // strict contract identical: 1-round budget throws; non-strict
-    // hands back the same partial peel as kTruss (support measured in
-    // the PRE-filter graph — the budget-exhaustion contract)
-    val ex = intercept[IllegalStateException](
-      Graph.kTrussDelta(e, k = 4, maxIter = 1))
-    assert(ex.getMessage.contains("fixpoint"))
-    assert(canon(Graph.kTrussDelta(e, k = 4, maxIter = 1, strict = false)) ==
-      canon(Graph.kTruss(e, k = 4, maxIter = 1, strict = false)))
-    // the real sf0.001 co-purchase graph, delta forced EVERY round
-    // (fullRecomputeFrac = 0) vs full recompute every round
-    // (fullRecomputeFrac = 1) vs kTruss — three ways, one answer
+  test("kTruss on the real co-purchase graph: non-empty, every support >= k-2, supports are the fixpoint") {
+    // sf0.001 co-purchase graph at k=5: the peel must leave a non-empty
+    // truss, and recomputing edgeSupport over the returned edges alone
+    // must reproduce the returned supports (no edge was kept on support
+    // from a triangle whose other edges were peeled)
     val g = Graph.coOccurrenceEdges(
       graft.Tables.lineitem(spark, "/root/testdata/sf0.001"),
       "l_orderkey", "l_partkey", maxBasketItems = 64)
-    val full = canon(Graph.kTruss(g, k = 5, maxIter = 10))
-    assert(full.nonEmpty, "fixture degenerate: k=5 truss is empty")
-    assert(canon(Graph.kTrussDelta(g, k = 5, maxIter = 10,
-      fullRecomputeFrac = 0.0)) == full)
-    assert(canon(Graph.kTrussDelta(g, k = 5, maxIter = 10,
-      fullRecomputeFrac = 1.0)) == full)
+    val truss = Graph.kTruss(g, k = 5, maxIter = 10)
+      .as[(Long, Long, Long)].collect().toSet
+    assert(truss.nonEmpty, "fixture degenerate: k=5 truss is empty")
+    assert(truss.forall(_._3 >= 3L))
+    val recomputed = Graph.edgeSupport(
+        truss.toSeq.map { case (u, v, _) => (u, v) }.toDF("u", "v"))
+      .as[(Long, Long, Long)].collect().toSet
+    assert(recomputed == truss)
   }
 
   test("bfsDistances: min-hop over multiple seeds, the radius horizon cuts, and off-graph seeds echo at 0") {

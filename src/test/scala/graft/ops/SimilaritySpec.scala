@@ -179,6 +179,25 @@ class SimilaritySpec extends SparkSpec {
         minCosine = 0.9) // n = 3 → nLists = 8 via the clamp
       .collect().map(r => r.getLong(0) -> r.getBoolean(3)).toMap
     assert(got == Map(0L -> true, 1L -> false, 2L -> true))
+    // planted exact duplicates: 64 originals e_i + e_(i+1)/2, whose
+    // pairwise cosine is at most 0.4 < τ, plus an exact copy of every
+    // 4th under a shifted id. Each copy drops with dup_of = its
+    // original, every original keeps, and the √n dial caps no cell.
+    val shift = 1000L
+    val originals = (0 until 64).map { i =>
+      val v = Array.fill(64)(0.0f); v(i) = 1.0f; v((i + 1) % 64) = 0.5f
+      (i.toLong, v)
+    }
+    val planted = originals.collect { case (id, v) if id % 4 == 0 => (id + shift, v) }
+    val res = Similarity.semDedupAutoSized((originals ++ planted).toDF("vec_id", "embedding"),
+        "vec_id", "embedding", minCosine = 0.8)
+      .select(col("vec_id"), col("dup_of"), col("keep"), col("cell_capped"))
+      .as[(Long, Option[Long], Boolean, Boolean)].collect()
+    val (copies, kept) = res.partition(_._1 >= shift)
+    assert(copies.length == planted.length)
+    assert(copies.forall { case (id, dupOf, keep, _) => !keep && dupOf.contains(id - shift) })
+    assert(kept.length == originals.length && kept.forall(_._3), "an original dropped")
+    assert(!res.exists(_._4), "a cell was capped at the auto-sized dial")
   }
 
   test("semDedup: an over-cap cell is excluded from pair formation and audited, never half-deduped") {
