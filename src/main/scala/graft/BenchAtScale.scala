@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** One-off pressure test at 10× bench scale: materializes a scaled
   * corpus from sf0.1 and times the most expensive registered queries on
@@ -12,16 +11,14 @@ import org.apache.spark.sql.functions._
   * superlinear beyond that is a plan bug to fix, not a bigger machine
   * to buy.
   *
-  * Scaled-data construction (deterministic, no RNG): K copies of each
-  * source table with ids shifted by copy × (max id + 1). Document text
-  * gets every token PREFIXED with the copy tag (`c<i>_`) for copies
-  * ≥ 1: within a copy the original near-dup structure is preserved
-  * (dedup work scales ~K×), while across copies every shingle differs —
-  * without the prefix, copies would be trivial near-dups of each other
-  * and candidate pairs would grow K²-quadratically BY CONSTRUCTION,
-  * measuring the synthetic data rather than the plan. Vocabulary grows
-  * K× (a real 10× corpus grows sublinearly), which makes the
-  * vocab-bounded queries' measurement conservative.
+  * The corpus is the FK-consistent one the 10× oracle gate verifies
+  * ([[ScaleCorpus.build]], reused when complete), so every registered
+  * query — the TPC-H star joins over part/nation/region included —
+  * times on the same data the gate checked.
+  *
+  * Usage: runMain graft.BenchAtScale [outDir] [copies] [query...]
+  * (source = SPARK_GRAFT_SF_DIR, default the sf0.1 test tables; outDir
+  * defaults to the gate corpus `.scaled/sfgate<copies>`).
   */
 object BenchAtScale {
   def main(args: Array[String]): Unit = {
@@ -29,7 +26,7 @@ object BenchAtScale {
     val copies = if (args.length > 1) args(1).toInt else 10
     // default outDir embeds the copy count so a later run with a
     // different `copies` can never silently reuse a mismatched corpus
-    val outDir = if (args.length > 0) args(0) else CorpusPaths.sfscale(copies)
+    val outDir = if (args.length > 0) args(0) else CorpusPaths.sfgate(copies)
     val names =
       if (args.length > 2) args.drop(2).toSeq
       else Seq("q60_recursive_cte", "d11_contamination", "d15_jaccard_verify",
@@ -50,51 +47,7 @@ object BenchAtScale {
       "spark.sql.adaptive.enabled" -> "true",
       Harness.cteRecursionRowLimit))
 
-    // a _COMPLETE marker (written last) gates reuse: an interrupted
-    // build — documents written, orders not — must rebuild, not crash
-    // every later run on the missing table
-    val donePath = java.nio.file.Paths.get(s"$outDir/_COMPLETE")
-    // lineitem and events joined the scaled set during round 7 — a
-    // corpus built before either is complete-but-missing them, so each
-    // table's own presence gates too
-    val liPath = java.nio.file.Paths.get(s"$outDir/lineitem.parquet")
-    val evPath = java.nio.file.Paths.get(s"$outDir/events.parquet")
-    // supplier/customer joined in round 11 (q102's salted join and
-    // q103's CSV round trip reference them) — same presence gating
-    val supPath = java.nio.file.Paths.get(s"$outDir/supplier.parquet")
-    val custPath = java.nio.file.Paths.get(s"$outDir/customer.parquet")
-    if (!java.nio.file.Files.exists(donePath) ||
-        !java.nio.file.Files.exists(liPath) ||
-        !java.nio.file.Files.exists(evPath) ||
-        !java.nio.file.Files.exists(supPath) ||
-        !java.nio.file.Files.exists(custPath)) {
-      System.err.println(s"[scale] building ${copies}x corpus at $outDir from $srcDir")
-      scaleDocuments(Tables.documents(spark, srcDir), copies)
-        .write.mode("overwrite").parquet(s"$outDir/documents.parquet")
-      scaleOrders(Tables.orders(spark, srcDir), copies)
-        .write.mode("overwrite").parquet(s"$outDir/orders.parquet")
-      scaleEmbeddings(Tables.embeddings(spark, srcDir), copies)
-        .write.mode("overwrite").parquet(s"$outDir/embeddings.parquet")
-      scaleLineitem(Tables.lineitem(spark, srcDir), copies)
-        .write.mode("overwrite").parquet(s"$outDir/lineitem.parquet")
-      // RAW events (ts as long nanos — the Tables.events transform must
-      // happen on READ of the scaled table, exactly as on the source):
-      // Tables.table with the nanos conf set gives the untransformed rows
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      scaleEvents(Tables.table(spark, srcDir, "events"), copies)
-        .write.mode("overwrite").parquet(s"$outDir/events.parquet")
-      // supplier stays UNSCALED: scaleLineitem leaves l_suppkey in the
-      // original range (suppliers are a shared dimension — each copy's
-      // lineitems fan onto the same suppliers, the real-TPC-H shape for
-      // a dim that grows sublinearly), so the matching supplier table is
-      // the original. customer scales K× (a per-SF fact in TPC-H; q103
-      // measures connector throughput over it and joins nothing).
-      Tables.supplier(spark, srcDir)
-        .write.mode("overwrite").parquet(s"$outDir/supplier.parquet")
-      scaleCustomer(Tables.customer(spark, srcDir), copies)
-        .write.mode("overwrite").parquet(s"$outDir/customer.parquet")
-      java.nio.file.Files.write(donePath, s"copies=$copies\n".getBytes("UTF-8"))
-    }
+    ScaleCorpus.build(spark, srcDir, outDir, copies)
 
     def timeOnce(fn: (SparkSession, String) => DataFrame): Double = {
       val t0 = System.nanoTime()
@@ -114,99 +67,5 @@ object BenchAtScale {
       .mkString(s"""{"metric":"scale${copies}x","unit":"sec","queries":{""", ",", "},")
     spark.stop()
     println(line + s""""src":"$srcDir"}""")
-  }
-
-  /** K shifted copies; copy ≥ 1 prefixes every token with `c<i>_`. */
-  def scaleDocuments(docs: DataFrame, copies: Int): DataFrame = {
-    val maxId = docs.agg(max(col("doc_id"))).collect()(0).getLong(0) + 1
-    (0 until copies).map { i =>
-      val tagged =
-        if (i == 0) col("text")
-        else when(col("text").isNotNull,
-          array_join(transform(split(col("text"), " "),
-            t => concat(lit(s"c${i}_"), t)), " "))
-      docs.withColumn("doc_id", col("doc_id") + lit(i * maxId))
-        .withColumn("text", tagged)
-    }.reduce(_ unionByName _)
-  }
-
-  /** K copies with BOTH order and part keys shifted: the co-purchase
-    * graph of the scaled corpus is K disjoint copies of the original
-    * graph (nodes, edges, and triangles all scale exactly K×, no
-    * cross-copy edges) — the graph twin of the doc-prefix rule: shared
-    * partkeys across copies would densify every node K× and grow
-    * wedges K² BY CONSTRUCTION, measuring the synthetic data rather
-    * than the plan. */
-  def scaleLineitem(li: DataFrame, copies: Int): DataFrame = {
-    val maxOrd = li.agg(max(col("l_orderkey"))).collect()(0).getLong(0) + 1
-    val maxPart = li.agg(max(col("l_partkey"))).collect()(0).getLong(0) + 1
-    (0 until copies).map { i =>
-      li.withColumn("l_orderkey", col("l_orderkey") + lit(i * maxOrd))
-        .withColumn("l_partkey", col("l_partkey") + lit(i * maxPart))
-    }.reduce(_ unionByName _)
-  }
-
-  /** K copies with event AND user ids shifted (timestamps untouched):
-    * each copy contributes a fresh user population over the same
-    * timeline, so per-user work (streaks, sliding distincts) scales
-    * exactly K× while per-day group counts densify K× — the event-log
-    * twin of the disjoint-graph rule. Expects RAW rows (ts as long
-    * nanos) and emits the same, so the scaled table reads through
-    * Tables.events identically to the source. */
-  def scaleEvents(events: DataFrame, copies: Int): DataFrame = {
-    val maxEv = events.agg(max(col("event_id"))).collect()(0).getLong(0) + 1
-    val maxUser = events.agg(max(col("user_id"))).collect()(0).getLong(0) + 1
-    (0 until copies).map { i =>
-      events.withColumn("event_id", col("event_id") + lit(i * maxEv))
-        .withColumn("user_id", col("user_id") + lit(i * maxUser))
-    }.reduce(_ unionByName _)
-  }
-
-  /** K copies with shifted customer keys; balances/segments untouched. */
-  def scaleCustomer(cust: DataFrame, copies: Int): DataFrame = {
-    val maxId = cust.agg(max(col("c_custkey"))).collect()(0).getLong(0) + 1
-    (0 until copies).map { i =>
-      cust.withColumn("c_custkey", col("c_custkey") + lit(i * maxId))
-    }.reduce(_ unionByName _)
-  }
-
-  /** K copies with shifted order keys; prices untouched. */
-  def scaleOrders(orders: DataFrame, copies: Int): DataFrame = {
-    val maxId = orders.agg(max(col("o_orderkey"))).collect()(0).getLong(0) + 1
-    (0 until copies).map { i =>
-      orders.withColumn("o_orderkey", col("o_orderkey") + lit(i * maxId))
-    }.reduce(_ unionByName _)
-  }
-
-  /** K shifted copies; copy ≥ 1 applies a distinct member of the
-    * rotation+reflection group: rotate left by (copy mod dim), and
-    * REVERSE the vector on every second lap around the dimension. Both
-    * transforms are orthogonal (permutations), so within a copy all
-    * pairwise cosines (the near-dup structure) are preserved exactly —
-    * ANN work scales ~K× — while a copy of vector v is decorrelated
-    * from other copies instead of being its exact duplicate (identical
-    * copies would multiply candidate pairs K² by construction and
-    * measure the synthetic data, not the plan). A bare rotation caps
-    * out at dim copies: copy dim would rotate by dim (= identity, a
-    * slice-by-negative-length crash en route), and copy dim+j would
-    * exactly duplicate copy j; the reflection lap doubles the distinct
-    * transforms to 2·dim (128 at the 64-dim corpus — probe `dim` once,
-    * require the cap). */
-  def scaleEmbeddings(emb: DataFrame, copies: Int): DataFrame = {
-    val maxId = emb.agg(max(col("vec_id"))).collect()(0).getLong(0) + 1
-    val dim = emb.where(col("embedding").isNotNull)
-      .select(size(col("embedding"))).limit(1).collect()(0).getInt(0)
-    require(copies <= 2 * dim,
-      s"scaleEmbeddings supports at most 2*dim = ${2 * dim} decorrelated copies, got $copies")
-    (0 until copies).map { i =>
-      val r = i % dim
-      val rotated =
-        if (r == 0) col("embedding")
-        else expr(s"concat(slice(embedding, ${r + 1}, size(embedding) - $r), " +
-          s"slice(embedding, 1, $r))")
-      val decorrelated = if ((i / dim) % 2 == 1) reverse(rotated) else rotated
-      emb.withColumn("vec_id", col("vec_id") + lit(i * maxId))
-        .withColumn("embedding", decorrelated)
-    }.reduce(_ unionByName _)
   }
 }

@@ -15,10 +15,9 @@ package graft
   */
 object CorpusPaths {
   val root: String = sys.env.getOrElse("SPARK_GRAFT_CORPUS_ROOT", ".scaled")
-  /** FK-consistent gate corpus (ScaleCorpus). */
+  /** FK-consistent scaled corpus (ScaleCorpus; the gate's, and the one
+    * BenchAtScale times). */
   def sfgate(copies: Int): String = s"$root/sfgate$copies"
-  /** Independently-scaled pressure corpus (BenchAtScale). */
-  def sfscale(copies: Int): String = s"$root/sfscale$copies"
-  /** Head-heavy skew twin of sfscale (SkewCorpus). */
+  /** Head-heavy skew twin of sfgate (SkewCorpus). */
   def sfskew(copies: Int, headTag: String): String = s"$root/sfskew$copies$headTag"
 }

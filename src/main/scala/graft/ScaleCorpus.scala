@@ -1,19 +1,14 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Full-consistency scaled corpus for the ORACLE GATE at sf1-equivalent
-  * scale (sf0.1 × 10 ≈ TPC-H sf1: ~6M lineitem rows).
+/** The one K× scaled-corpus builder: the corpus of the ORACLE GATE at
+  * sf1-equivalent scale (sf0.1 × 10 ≈ TPC-H sf1: ~6M lineitem rows),
+  * and the corpus `BenchAtScale` times and `SkewCorpus` skews.
   *
-  * `BenchAtScale` scales seven tables independently — enough for timing
-  * single-table plans, but its per-table max-id shift bases break
-  * cross-table joins (max(l_orderkey) need not equal max(o_orderkey),
-  * so copy i of lineitem lands on different keys than copy i of
-  * orders). The gate runs EVERY registered query, including the TPC-H
-  * family's 4-way star joins and the documents↔embeddings id join, so
-  * this builder shifts every key family by ONE shared base =
-  * max over all tables referencing that family, +1:
+  * Every key family shifts by ONE shared base = max over all tables
+  * referencing that family, +1:
   *
   *   orderkey:  orders.o_orderkey ∪ lineitem.l_orderkey
   *   partkey:   part.p_partkey    ∪ lineitem.l_partkey
@@ -23,13 +18,35 @@ import org.apache.spark.sql.functions._
   *
   * so copy i of any referencing row still points at copy i of the
   * referenced row — the scaled corpus is K disjoint FK-consistent
-  * copies. region/nation are dimension enums (25/5 rows at any SF) and
-  * copy through verbatim; nationkeys are NOT shifted anywhere, so each
-  * copy's customers/suppliers share them, exactly as real TPC-H scale
-  * growth behaves. Documents keep BenchAtScale's token-prefix rule and
-  * embeddings its rotation rule (within-copy near-dup structure
-  * preserved, no synthetic K² cross-copy pairs); events shift both ids
-  * (fresh user populations over the same timeline).
+  * copies (per-table bases would break the TPC-H star joins and the
+  * documents↔embeddings id join: max(l_orderkey) need not equal
+  * max(o_orderkey)). region/nation are dimension enums (25/5 rows at
+  * any SF) and copy through verbatim; nationkeys are NOT shifted
+  * anywhere, so each copy's customers/suppliers share them, exactly as
+  * real TPC-H scale growth behaves. Events shift both ids (fresh user
+  * populations over the same timeline).
+  *
+  * Documents: copy ≥ 1 PREFIXES every token with the copy tag (`c<i>_`).
+  * Within a copy the original near-dup structure is preserved (dedup
+  * work scales ~K×), while across copies every shingle differs —
+  * without the prefix, copies would be trivial near-dups of each other
+  * and candidate pairs would grow K²-quadratically BY CONSTRUCTION,
+  * measuring the synthetic data rather than the plan. Vocabulary grows
+  * K× (a real 10× corpus grows sublinearly), which makes the
+  * vocab-bounded queries' measurement conservative.
+  *
+  * Embeddings: copy ≥ 1 applies a distinct member of the
+  * rotation+reflection group: rotate left by (copy mod dim), and
+  * REVERSE the vector on every second lap around the dimension. Both
+  * transforms are orthogonal (permutations), so within a copy all
+  * pairwise cosines are preserved exactly — ANN work scales ~K× — while
+  * a copy of vector v is decorrelated from other copies instead of
+  * being its exact duplicate (K² candidate pairs by construction
+  * again). A bare rotation caps out at dim copies: copy dim would
+  * rotate by dim (= identity, a slice-by-negative-length crash en
+  * route), and copy dim+j would exactly duplicate copy j; the
+  * reflection lap doubles the distinct transforms to 2·dim (128 at the
+  * 64-dim corpus — `dim` is probed once and the cap required).
   *
   * Usage: runMain graft.ScaleCorpus [outDir] [copies]
   * (source = SPARK_GRAFT_SF_DIR, default /root/testdata/sf0.1).
@@ -41,11 +58,19 @@ object ScaleCorpus {
     val outDir = if (args.length > 0) args(0) else CorpusPaths.sfgate(copies)
     val spark = Harness.session(Harness.confs(Harness.cpus(8),
       "spark.sql.adaptive.enabled" -> "true"))
+    build(spark, srcDir, outDir, copies)
+    spark.stop()
+  }
 
+  /** Write `copies` FK-consistent copies of the tables in `srcDir` to
+    * `outDir`. A `_COMPLETE` marker, written last, gates reuse: a
+    * complete corpus is returned at once, an interrupted build is
+    * rebuilt rather than read with tables missing. */
+  def build(spark: SparkSession, srcDir: String, outDir: String, copies: Int): Unit = {
     val donePath = java.nio.file.Paths.get(s"$outDir/_COMPLETE")
     if (java.nio.file.Files.exists(donePath)) {
       System.err.println(s"[scale] reusing complete corpus at $outDir")
-      spark.stop(); return
+      return
     }
 
     def maxOf(df: DataFrame, c: String): Long =
@@ -85,8 +110,8 @@ object ScaleCorpus {
     write(shifted(li, "l_orderkey" -> baseOrd, "l_partkey" -> basePart,
       "l_suppkey" -> baseSupp), "lineitem")
 
-    // documents: BenchAtScale's token-prefix rule, but on the SHARED doc
-    // base so the embeddings id join stays aligned
+    // documents: token prefix on the SHARED doc base, so the embeddings
+    // id join stays aligned
     val docs = Tables.documents(spark, srcDir)
     write((0 until copies).map { i =>
       val tagged =
@@ -98,10 +123,8 @@ object ScaleCorpus {
         .withColumn("text", tagged)
     }.reduce(_ unionByName _), "documents")
 
-    // rotation+reflection decorrelation (the BenchAtScale.scaleEmbeddings
-    // rule — see its scaladoc for why a bare rotation caps out at dim
-    // copies), but on the SHARED doc base so the documents↔embeddings
-    // id join stays aligned
+    // embeddings: rotation+reflection on the SHARED doc base, so the
+    // documents↔embeddings id join stays aligned
     val emb = Tables.embeddings(spark, srcDir)
     val embDim = emb.where(col("embedding").isNotNull)
       .select(size(col("embedding"))).limit(1).collect()(0).getInt(0)
@@ -130,6 +153,5 @@ object ScaleCorpus {
     write(shifted(ev, "event_id" -> maxEv, "user_id" -> maxUser), "events")
 
     java.nio.file.Files.write(donePath, s"copies=$copies\n".getBytes("UTF-8"))
-    spark.stop()
   }
 }

@@ -1,6 +1,6 @@
 package graft.etl
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** C1–C7: the reference's cast / normalization surface (SURVEY.md §2.3)
@@ -50,9 +50,6 @@ object Cleaning {
     * null on failure (pd.to_datetime errors='coerce'). */
   def parseDate(df: DataFrame, c: String): DataFrame =
     ifColumn(df, c)(_.withColumn(c, expr(s"try_cast(`$c` AS DATE)")))
-
-  /** C6 helper — round a column to n decimals. */
-  def round2(c: Column): Column = round(c, 2)
 
   /** The full bronze->silver cleaning pass in reference order
     * (main.py:209-231): valor coerce+fill, nome_* normalization,

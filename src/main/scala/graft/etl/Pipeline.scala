@@ -44,18 +44,16 @@ object Pipeline {
     *           (keep-original on failure), partitioned snappy write;
     *   silver  (main.py:189-267): coerce valor (null→0), normalize 6
     *           nome_* cols, nullable ano/mes, QUALITY GATE (abort before
-    *           any data becomes visible), then date parse, write — in
-    *           overwrite mode the gate runs as write-audit-publish
-    *           (metrics observed during ONE staging-write pass, publish
-    *           by atomic move; Sinks.publishAudited) instead of a
-    *           separate gate scan + write pass; append mode keeps the
-    *           two-pass gate since an append publish would need a
-    *           table-format merge commit;
+    *           any data becomes visible), then date parse, write — the
+    *           gate runs as write-audit-publish (metrics observed during
+    *           ONE staging-write pass, publish by atomic move;
+    *           Sinks.publishAudited) instead of a separate gate scan +
+    *           write pass;
     *   gold    (main.py:270-323): require {ano,mes,nome_orgao,valor},
     *           group-sum to total_gasto, write.
     */
   def medallion(rawGlob: String, bronzePath: String, silverPath: String,
-      goldPath: String, mode: String = "overwrite"): Seq[Stage] = Seq(
+      goldPath: String): Seq[Stage] = Seq(
     Stage("raw_to_bronze", { spark =>
       // ano/mes are already IntegerType in the declared read schema
       // (GastosSchema.raw), so the reference's astype(int) (C1,
@@ -63,7 +61,7 @@ object Pipeline {
       // become null under PERMISSIVE and the silver gate catches them.
       // strictCastOrKeep stays available for string-typed inputs.
       Map("rows_written" -> Sinks.writePartitionedCounted(
-        Sources.readRawPages(spark, rawGlob), bronzePath, mode))
+        Sources.readRawPages(spark, rawGlob), bronzePath))
     }),
     Stage("bronze_to_silver", { spark =>
       val bronze = Sources.readParquetLayer(spark, bronzePath)
@@ -72,21 +70,16 @@ object Pipeline {
       // the gate columns (ano/mes/nome_*/valor) are untouched by the
       // date parse, so auditing the dated frame == gating the cleaned one
       val dated = Cleaning.parseDate(cleaned, "data_pagamento")
-      if (mode == "overwrite") {
-        val (observed, gate) = Quality.observedChecks(dated, Quality.silverChecks)
-        Map("rows_written" -> Sinks.publishAudited(observed, silverPath,
-          () => Quality.assertObserved(gate, Quality.silverChecks)))
-      } else {
-        Quality.runGate(cleaned, Quality.silverChecks)
-        Map("rows_written" -> Sinks.writePartitionedCounted(dated, silverPath, mode))
-      }
+      val (observed, gate) = Quality.observedChecks(dated, Quality.silverChecks)
+      Map("rows_written" -> Sinks.publishAudited(observed, silverPath,
+        () => Quality.assertObserved(gate, Quality.silverChecks)))
     }),
     Stage("silver_to_gold", { spark =>
       val silver = Sources.readParquetLayer(spark, silverPath)
       Quality.requireColumns(silver, Seq("ano", "mes", "nome_orgao", "valor"))
       val gold = Aggregates.goldAggregate(silver)
         .select(col("ano"), col("mes"), col("nome_orgao"), col("total_gasto"))
-      Map("rows_written" -> Sinks.writePartitionedCounted(gold, goldPath, mode))
+      Map("rows_written" -> Sinks.writePartitionedCounted(gold, goldPath))
     }))
 
   /** Partition-scoped incremental recompute (SURVEY §4.1): rebuild

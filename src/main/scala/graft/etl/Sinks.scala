@@ -16,11 +16,10 @@ object Sinks {
       df: DataFrame,
       path: String,
       mode: String = "overwrite",
-      partitionBy: Seq[String] = GastosSchema.partitionColumns,
-      compression: String = "snappy"): Unit = {
+      partitionBy: Seq[String] = GastosSchema.partitionColumns): Unit = {
     df.write
       .mode(mode)
-      .option("compression", compression)
+      .option("compression", "snappy")
       .partitionBy(partitionBy: _*)
       .parquet(path)
   }
@@ -35,11 +34,10 @@ object Sinks {
       df: DataFrame,
       path: String,
       mode: String = "overwrite",
-      partitionBy: Seq[String] = GastosSchema.partitionColumns,
-      compression: String = "snappy"): Long = {
+      partitionBy: Seq[String] = GastosSchema.partitionColumns): Long = {
     val obs = Observation()
     writePartitioned(df.observe(obs, count(lit(1)).as("rows")),
-      path, mode, partitionBy, compression)
+      path, mode, partitionBy)
     obs.get("rows").asInstanceOf[Long]
   }
 
@@ -50,12 +48,11 @@ object Sinks {
   def overwritePartitionsOf(
       df: DataFrame,
       path: String,
-      partitionBy: Seq[String] = GastosSchema.partitionColumns,
-      compression: String = "snappy"): Unit = {
+      partitionBy: Seq[String] = GastosSchema.partitionColumns): Unit = {
     df.write
       .mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
-      .option("compression", compression)
+      .option("compression", "snappy")
       .partitionBy(partitionBy: _*)
       .parquet(path)
   }
@@ -100,7 +97,7 @@ object Sinks {
     * after a clean audit the staged copy is the valuable one, and the
     * rerun's own staging overwrite supersedes it. */
   private def stagedPublish(df: DataFrame, path: String, audit: () => Unit,
-      partitionBy: Seq[String], compression: String)(
+      partitionBy: Seq[String])(
       publish: (FileSystem, HPath) => Unit): Long = {
     val fs = new HPath(path)
       .getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
@@ -108,8 +105,7 @@ object Sinks {
     delete(fs, staging)
     val rows =
       try {
-        val r = writePartitionedCounted(
-          df, staging.toString, "overwrite", partitionBy, compression)
+        val r = writePartitionedCounted(df, staging.toString, "overwrite", partitionBy)
         audit()
         r
       } catch { case e: Throwable => delete(fs, staging); throw e }
@@ -142,9 +138,8 @@ object Sinks {
       df: DataFrame,
       path: String,
       audit: () => Unit,
-      partitionBy: Seq[String] = GastosSchema.partitionColumns,
-      compression: String = "snappy"): Long =
-    stagedPublish(df, path, audit, partitionBy, compression) { (fs, staging) =>
+      partitionBy: Seq[String] = GastosSchema.partitionColumns): Long =
+    stagedPublish(df, path, audit, partitionBy) { (fs, staging) =>
       swapInto(fs, staging, fs.makeQualified(new HPath(path)),
         fs.makeQualified(new HPath(path + ".old")))
     }
@@ -168,9 +163,8 @@ object Sinks {
       df: DataFrame,
       path: String,
       audit: () => Unit,
-      partitionBy: Seq[String] = GastosSchema.partitionColumns,
-      compression: String = "snappy"): Long =
-    stagedPublish(df, path, audit, partitionBy, compression) { (fs, staging) =>
+      partitionBy: Seq[String] = GastosSchema.partitionColumns): Long =
+    stagedPublish(df, path, audit, partitionBy) { (fs, staging) =>
       val target = fs.makeQualified(new HPath(path))
       val oldRoot = fs.makeQualified(new HPath(path + ".old"))
       if (partitionBy.isEmpty) {
@@ -200,11 +194,10 @@ object Sinks {
   def overwritePartitionsOfCounted(
       df: DataFrame,
       path: String,
-      partitionBy: Seq[String] = GastosSchema.partitionColumns,
-      compression: String = "snappy"): Long = {
+      partitionBy: Seq[String] = GastosSchema.partitionColumns): Long = {
     val obs = Observation()
     overwritePartitionsOf(df.observe(obs, count(lit(1)).as("rows")),
-      path, partitionBy, compression)
+      path, partitionBy)
     obs.get("rows").asInstanceOf[Long]
   }
 }

@@ -2,55 +2,29 @@ package graft.etl
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
 
 /** Readers (SURVEY.md §2.1 S5/S6/S8).
   *
   * The reference loops json.load over a sorted glob and concatenates
   * page["results"] (main.py:109-124) — single-threaded, whole corpus in
-  * RAM. Here each page file is a split of a distributed multiLine JSON
+  * RAM. Here each page file is one row of a distributed wholetext
   * scan: union-all across pages is implicit, schema is declared (no
-  * sampling pass), and malformed files degrade to null rows we drop —
+  * sampling pass), and malformed files parse to null and are dropped —
   * the same per-file tolerance as the reference's try/except skip.
   */
 object Sources {
 
-  /** S5: envelope-form pages ({count,next,previous,results:[...]}).
-    * One row per record via explode(results). */
-  def readEnvelopeJson(spark: SparkSession, glob: String,
-      record: StructType = GastosSchema.raw): DataFrame =
-    spark.read.schema(GastosSchema.envelopeOf(record))
-      .option("multiLine", true).option("mode", "PERMISSIVE")
-      .json(glob)
-      .where(col("results").isNotNull) // bare-array/corrupt files -> all-null row
-      .select(explode(col("results")).as("r"))
-      .select(col("r.*"))
-
-  /** S5 variant: legacy bare-array pages ([{...}, ...]) — 55 of the
-    * reference's 1021 committed files; its loader silently skips them
-    * (main.py:119), this reads them. Spark's multiLine JSON reader
-    * yields one row per array element when given the record schema.
-    * Envelope-shaped files surface here as ONE all-column-null phantom
-    * row; only that exact shape is dropped — a real record with null
-    * partition keys survives to be caught by the silver quality gate. */
-  def readBareArrayJson(spark: SparkSession, glob: String,
-      record: StructType = GastosSchema.raw): DataFrame = {
-    val df = spark.read.schema(record)
-      .option("multiLine", true).option("mode", "PERMISSIVE")
-      .json(glob)
-    df.where(df.columns.map(col(_).isNotNull).reduce(_ || _))
-  }
-
-  /** Both page forms in ONE pass over the files: wholetext read, parse
-    * the envelope shape, fall back to the bare-array shape only for
-    * files where the envelope parse came up empty (coalesce
+  /** S5: both page forms in ONE pass over the files — envelope pages
+    * ({count,next,previous,results:[...]}) and the legacy bare-array
+    * pages ([{...}, ...]; 55 of the reference's 1021 committed files,
+    * which its loader silently skips, main.py:119). Wholetext read,
+    * parse the envelope shape, fall back to the bare-array shape only
+    * for files where the envelope parse came up empty (coalesce
     * short-circuits, so the minority form pays the second parse, not
-    * the whole corpus — the two-scan version read every byte twice).
-    * Corrupt files parse to null under both shapes and are dropped,
-    * matching the reference's per-file try/except skip (main.py:122). */
-  def readRawPages(spark: SparkSession, glob: String,
-      tolerateBareArrays: Boolean = true): DataFrame = {
-    if (!tolerateBareArrays) return readEnvelopeJson(spark, glob)
+    * the whole corpus). Corrupt files parse to null under both shapes
+    * and are dropped, matching the reference's per-file try/except skip
+    * (main.py:122). */
+  def readRawPages(spark: SparkSession, glob: String): DataFrame = {
     val record = GastosSchema.raw
     val arrayType = org.apache.spark.sql.types.ArrayType(record)
     val parsed = spark.read.option("wholetext", true).text(glob)

@@ -12,7 +12,7 @@ class SourcesSinksSpec extends SparkSpec {
     """{"ano": 2011, "mes": 1, "codigo_acao": "4002", "codigo_favorecido": "x",
       |"nome_orgao": "Orgao", "valor": "428.14"}""".stripMargin.replace("\n", " ")
 
-  test("readEnvelopeJson explodes results; bare arrays and corrupt files are tolerated") {
+  test("readRawPages: envelope, bare-array and corrupt pages") {
     val dir = tmpDir("sources")
     Files.write(Paths.get(dir, "p1.json"),
       s"""{"count": 2, "next": null, "previous": null, "results": [$rec, $rec]}"""
@@ -22,8 +22,11 @@ class SourcesSinksSpec extends SparkSpec {
     Files.write(Paths.get(dir, "p3.json"),
       "{{{not json".getBytes(StandardCharsets.UTF_8))
 
-    assert(Sources.readEnvelopeJson(spark, s"$dir/*.json").count() == 2)
-    assert(Sources.readBareArrayJson(spark, s"$dir/*.json").count() == 1)
+    // each page form on its own: envelope explodes results, a bare array
+    // yields its elements, a corrupt file yields nothing
+    assert(Sources.readRawPages(spark, s"$dir/p1.json").count() == 2)
+    assert(Sources.readRawPages(spark, s"$dir/p2.json").count() == 1)
+    assert(Sources.readRawPages(spark, s"$dir/p3.json").count() == 0)
     val all = Sources.readRawPages(spark, s"$dir/*.json")
     assert(all.count() == 3)
     assert(all.columns.length == 28) // full declared gastos schema
