@@ -7,10 +7,11 @@ import org.apache.spark.sql.functions._
   * (main.py:167-186, invoked at :234-239) as a reusable Check ADT.
   *
   * The reference runs each assert as its own full-column pandas
-  * reduction; here ALL checks collapse into ONE aggregate job (one scan,
-  * partial+final agg) returning a violation count per check. The gate
-  * throws QualityException before the sink runs — the same
-  * abort-before-write control flow as the reference's try/assert/return.
+  * reduction; here ALL checks ride along the caller's own action as
+  * Observation metrics (no separate gate scan), one violation count per
+  * check. The gate throws QualityException before anything is published
+  * — the same abort-before-write control flow as the reference's
+  * try/assert/return.
   *
   * NULL semantics follow pandas (SURVEY §2.5): a NULL fails `between`
   * and `>=` tests, so predicates are wrapped NOT COALESCE(pred, FALSE).
@@ -60,25 +61,6 @@ object Quality {
       s"duplicate check names would shadow each other in the result map: ${dup.mkString(", ")}")
   }
 
-  /** Violation counts for every check in a single aggregate pass. */
-  def measure(df: DataFrame, checks: Seq[Check]): Map[String, Long] = {
-    validate(checks)
-    val row = df.agg(
-      sum(checks.head.violation).as("c0"),
-      checks.tail.zipWithIndex.map { case (c, i) => sum(c.violation).as(s"c${i + 1}") }: _*
-    ).collect()(0)
-    checks.zipWithIndex.map { case (c, i) =>
-      c.name -> (if (row.isNullAt(i)) 0L else row.getLong(i))
-    }.toMap
-  }
-
-  /** V4: run the gate; throw QualityException when any check has
-    * violations, so the caller aborts before its sink. */
-  def runGate(df: DataFrame, checks: Seq[Check]): Unit = {
-    val failed = measure(df, checks).filter(_._2 > 0)
-    if (failed.nonEmpty) throw QualityException(failed)
-  }
-
   /** Gate checks attached as Observation metrics: the violation counts
     * are measured DURING the caller's own action (a staging write), not
     * by a separate gate scan — the one-pass half of write-audit-publish
@@ -91,10 +73,10 @@ object Quality {
     (df.observe(obs, metrics.head, metrics.tail: _*), obs)
   }
 
-  /** The audit half of write-audit-publish: read the violation counts
+  /** V4, the audit half of write-audit-publish: read the violation counts
     * [[observedChecks]] collected during the action; throw
-    * QualityException (same contract as [[runGate]]) on any violation.
-    * Null metrics (zero-row frame) count as clean, matching measure(). */
+    * QualityException naming every failing check with its count. Null
+    * metrics (zero-row frame: sum over no rows) count as clean. */
   def assertObserved(obs: Observation, checks: Seq[Check]): Unit = {
     val row = obs.get
     val failed = checks.flatMap { c =>

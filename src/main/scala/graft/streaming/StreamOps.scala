@@ -1,6 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders,
+  KeyValueGroupedDataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -16,6 +17,21 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * (no watermark = unbounded state = eventual OOM at 100 TB/day). Keys
   * are hash-partitioned across executors — the same salting rules apply
   * to skewed keys as in batch.
+  *
+  * Keyed state has two lifecycles, one per time domain, each owned by
+  * one private driver; an operator supplies only its fold:
+  *   - [[idleFold]] (arrival time; state expires after a processing-time
+  *     idle timeout): [[runningTotals]], [[debounceStream]],
+  *     [[funnelStream]], [[hllDistinctStream]], [[bloomDedupStream]],
+  *     [[countMinStream]], [[zscoreStream]], [[ewmaStream]],
+  *     [[topKStream]];
+  *   - [[dayFold]] (event time; state per (group, UTC day), sealed once
+  *     the watermark passes the day's end): [[zscoreStreamByDay]],
+  *     [[countMinStreamByDay]], [[topKStreamByDay]],
+  *     [[hllDistinctStreamByDay]].
+  * [[ewmaStreamByDay]], [[debounceStreamEventTime]] and
+  * [[funnelStreamEventTime]] buffer pending rows and arm their own
+  * event-time wake-ups.
   */
 object StreamOps {
 
@@ -28,15 +44,6 @@ object StreamOps {
       .agg(count(lit(1)).as("n"), sum(col(valueCol)).as("total"))
       .select(col("window.start").as("win_start"), col("window.end").as("win_end"),
         col(keyCol), col("n"), col("total"))
-
-  /** Sliding-window variant (windowDuration, slideDuration). */
-  def slidingAgg(events: DataFrame, tsCol: String, watermark: String,
-      windowDur: String, slide: String, keyCol: String): DataFrame =
-    events
-      .withWatermark(tsCol, watermark)
-      .groupBy(window(col(tsCol), windowDur, slide), col(keyCol))
-      .agg(count(lit(1)).as("n"))
-      .select(col("window.start").as("win_start"), col(keyCol), col("n"))
 
   /** Session windows with a fixed inactivity gap. */
   def sessionAgg(events: DataFrame, tsCol: String, watermark: String,
@@ -56,6 +63,128 @@ object StreamOps {
     events.withWatermark(tsCol, watermark)
       .dropDuplicatesWithinWatermark(keyCols)
 
+  // --- the two keyed-state lifecycles (flatMapGroupsWithState) ---
+  //
+  // Spark clears a group's registered timeout on EVERY invocation of the
+  // state function, so an invocation that does not set it again cancels
+  // the timer and the group's state never expires. Both drivers therefore
+  // re-arm on every path that leaves state in place — including a batch
+  // with no observation (only null values), where an early return that
+  // skipped the re-arm once pinned state forever. The other half of the
+  // rule bounds key cardinality: a batch with no observation for a key
+  // WITHOUT state writes no state and arms no timer, so a junk-key
+  // firehose allocates nothing (unbounded key cardinality with untimed
+  // state is an eventual OOM).
+
+  /** An operator's fold: given the key, the batch's rows and the prior
+    * state, return Some((new state, rows to emit)), or None when the
+    * batch holds no observation (no state is written, nothing is
+    * emitted). The fold must consume `rows` before it returns; the
+    * emitted iterator may be lazy. */
+  private[streaming] type Fold[K, V, S, U] =
+    (K, Iterator[V], Option[S]) => Option[(S, Iterator[U])]
+
+  /** Arrival-time lifecycle: ProcessingTimeTimeout when `idleTimeout` is
+    * set, NoTimeout otherwise; see [[idleFoldStep]]. */
+  private def idleFold[K, V, S: Encoder, U: Encoder](
+      grouped: KeyValueGroupedDataset[K, V], idleTimeout: Option[String])(
+      fold: Fold[K, V, S, U]): Dataset[U] = {
+    val timeoutConf =
+      if (idleTimeout.isDefined) GroupStateTimeout.ProcessingTimeTimeout
+      else GroupStateTimeout.NoTimeout
+    grouped.flatMapGroupsWithState[S, U](OutputMode.Append, timeoutConf)(
+      idleFoldStep(idleTimeout, fold))
+  }
+
+  /** [[idleFold]]'s per-invocation function: a timed-out group is
+    * removed and emits nothing; Some updates the state and arms
+    * now + idleTimeout; None re-arms only a group that already holds
+    * state. */
+  private[streaming] def idleFoldStep[K, V, S, U](idleTimeout: Option[String],
+      fold: Fold[K, V, S, U]): (K, Iterator[V], GroupState[S]) => Iterator[U] =
+    (key, rows, state) =>
+      if (state.hasTimedOut) {
+        state.remove()
+        Iterator.empty
+      } else fold(key, rows, state.getOption) match {
+        case Some((next, out)) =>
+          state.update(next)
+          idleTimeout.foreach(state.setTimeoutDuration)
+          out
+        case None =>
+          if (state.exists) idleTimeout.foreach(state.setTimeoutDuration)
+          Iterator.empty
+      }
+
+  /** Event-time lifecycle, keyed on (group, UTC day of `ts`): rows with
+    * a null `ts` are dropped, the input is watermarked by `lateness`
+    * (it must carry a `ts` timestamp column), and each (group, day) is
+    * sealed by an EventTimeTimeout; see [[dayFoldStep]]. The fold's key
+    * is (group, ISO day string). */
+  private def dayFold[V, S: Encoder, U: Encoder](rows: Dataset[V],
+      lateness: String)(groupAndTs: V => (String, java.sql.Timestamp))(
+      fold: Fold[(String, String), V, S, U]): Dataset[U] = {
+    implicit val dayKey: Encoder[(String, Long)] =
+      Encoders.tuple(Encoders.STRING, Encoders.scalaLong)
+    rows
+      .where(col("ts").isNotNull)
+      .withWatermark("ts", lateness)
+      .groupByKey { v => val (g, ts) = groupAndTs(v); (g, utcDayIdx(ts)) }
+      .flatMapGroupsWithState[S, U](
+        OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(dayFoldStep(fold))
+  }
+
+  /** [[dayFold]]'s per-invocation function. A timed-out day is removed.
+    * Sealed-day guard: flatMapGroupsWithState does NOT pre-filter late
+    * input the way windowed aggregations do, so an over-late row (day
+    * end already behind the watermark) arriving after the timeout
+    * removed the day's state would seed FRESH state for a sealed day
+    * and emit nonsense — a day with no state and a watermark at or past
+    * its end drops its rows unfolded. Some updates the state and arms
+    * the seal at the day's end ([[armDaySeal]]: the watermark already
+    * encodes the lateness allowance); None re-arms only a day that
+    * already holds state. */
+  private[streaming] def dayFoldStep[V, S, U](fold: Fold[(String, String), V, S, U])
+      : ((String, Long), Iterator[V], GroupState[S]) => Iterator[U] =
+    (key, rows, state) => {
+      val (group, dayIdx) = key
+      val dayEndMs = (dayIdx + 1) * 86400000L
+      if (state.hasTimedOut) {
+        state.remove()
+        Iterator.empty
+      } else if (!state.exists && state.getCurrentWatermarkMs() >= dayEndMs) {
+        Iterator.empty
+      } else fold((group, utcDayString(dayIdx)), rows, state.getOption) match {
+        case Some((next, out)) =>
+          state.update(next)
+          armDaySeal(state, dayEndMs)
+          out
+        case None =>
+          if (state.exists) armDaySeal(state, dayEndMs)
+          Iterator.empty
+      }
+    }
+
+  private def utcDayIdx(ts: java.sql.Timestamp): Long =
+    Math.floorDiv(ts.getTime, 86400000L)
+  private def utcDayString(dayIdx: Long): String =
+    java.time.LocalDate.ofEpochDay(dayIdx).toString
+
+  /** Re-arm a (group, day) seal. The day's end is the natural seal
+    * time, but the clamp is load-bearing: flatMapGroupsWithState
+    * admits late rows against the PREVIOUS batch's watermark while
+    * setTimeoutTimestamp validates against the CURRENT one. A late
+    * row for a still-open day, arriving in the very batch where the
+    * watermark jumps past that day's end (the backfill scenario these
+    * operators exist for), passes the filter and folds — then a bare
+    * setTimeoutTimestamp(dayEndMs) throws IllegalArgumentException
+    * and kills the query, deterministically again on restart. Clamped
+    * just past the current watermark, the seal instead fires on the
+    * next watermark advance. */
+  private[streaming] def armDaySeal(state: GroupState[_], dayEndMs: Long): Unit =
+    state.setTimeoutTimestamp(
+      math.max(dayEndMs, state.getCurrentWatermarkMs() + 1L))
+
   // --- custom state: running per-key aggregate via flatMapGroupsWithState ---
 
   final case class KeyedEvent(user_id: Long, value: Double)
@@ -64,33 +193,19 @@ object StreamOps {
   /** Custom stateful op: emits the updated running (count, sum) per key
     * on every batch — the mapGroupsWithState pattern the reference's
     * "recompute everything" silver stage would become on a stream.
-    * State for keys idle longer than `idleTimeout` is dropped (this
-    * file's own rule: unbounded key cardinality with untimed state is
-    * an eventual OOM — the one custom-state operator must follow it). */
+    * State for keys idle longer than `idleTimeout` is dropped. */
   def runningTotals(spark: SparkSession, events: Dataset[KeyedEvent],
       idleTimeout: Option[String] = Some("1 hour")): Dataset[RunningTotal] = {
     import spark.implicits._
-    val timeoutConf =
-      if (idleTimeout.isDefined) GroupStateTimeout.ProcessingTimeTimeout
-      else GroupStateTimeout.NoTimeout
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState[RunningTotal, RunningTotal](
-        OutputMode.Append, timeoutConf) {
-        (key: Long, rows: Iterator[KeyedEvent], state: GroupState[RunningTotal]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val prior = state.getOption.getOrElse(RunningTotal(key, 0L, 0.0))
-            var n = prior.n
-            var total = prior.total
-            rows.foreach { e => n += 1; total += e.value }
-            val updated = RunningTotal(key, n, total)
-            state.update(updated)
-            idleTimeout.foreach(state.setTimeoutDuration)
-            Iterator(updated)
-          }
-      }
+    idleFold(events.groupByKey(_.user_id), idleTimeout) {
+      (key: Long, rows: Iterator[KeyedEvent], prior: Option[RunningTotal]) =>
+        val p = prior.getOrElse(RunningTotal(key, 0L, 0.0))
+        var n = p.n
+        var total = p.total
+        rows.foreach { e => n += 1; total += e.value }
+        val updated = RunningTotal(key, n, total)
+        Some((updated, Iterator(updated)))
+    }
   }
 
   final case class TypedEvent(event_id: Long, user_id: Long,
@@ -131,29 +246,17 @@ object StreamOps {
       windowSeconds: Long,
       idleTimeout: Option[String]): Dataset[DebounceVerdict] = {
     import spark.implicits._
-    val timeoutConf =
-      if (idleTimeout.isDefined) GroupStateTimeout.ProcessingTimeTimeout
-      else GroupStateTimeout.NoTimeout
-    events.groupByKey(e => (e.user_id, e.event_type))
-      .flatMapGroupsWithState[Long, DebounceVerdict](
-        OutputMode.Append, timeoutConf) {
-        (key: (Long, String), rows: Iterator[TypedEvent], state: GroupState[Long]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            var prev = state.getOption.getOrElse(Long.MinValue)
-            val out = rows.toSeq.sortBy(e => (e.ts_us, e.event_id)).map { e =>
-              val gap = if (prev == Long.MinValue) -1L else e.ts_us - prev
-              prev = e.ts_us
-              DebounceVerdict(e.event_id, key._1, key._2, gap,
-                gap == -1L || gap >= windowSeconds * 1000000L)
-            }
-            state.update(prev)
-            idleTimeout.foreach(state.setTimeoutDuration)
-            out.iterator
-          }
-      }
+    idleFold(events.groupByKey(e => (e.user_id, e.event_type)), idleTimeout) {
+      (key: (Long, String), rows: Iterator[TypedEvent], prior: Option[Long]) =>
+        var prev = prior.getOrElse(Long.MinValue)
+        val out = rows.toSeq.sortBy(e => (e.ts_us, e.event_id)).map { e =>
+          val gap = if (prev == Long.MinValue) -1L else e.ts_us - prev
+          prev = e.ts_us
+          DebounceVerdict(e.event_id, key._1, key._2, gap,
+            gap == -1L || gap >= windowSeconds * 1000000L)
+        }
+        Some((prev, out.iterator))
+    }
   }
 
   final case class FunnelState(stage: Int, lastTs: Long, deadline: Long)
@@ -168,7 +271,8 @@ object StreamOps {
     * FunnelProgress row, so counting distinct users per stage downstream
     * reproduces the batch stage counts (asserted stream==batch in
     * StreamOpsSpec — the ordered greedy walk takes the first qualifying
-    * event, which IS the batch min). Same ordering caveat as
+    * event, which IS the batch min). A user whose events never include
+    * the first step holds no state. Same ordering caveat as
     * [[debounceStream]]: within a micro-batch rows are walked in
     * (ts, id) order; cross-batch reordering needs an upstream
     * watermark+sort stage. Timeout contract also as in
@@ -190,37 +294,25 @@ object StreamOps {
     require(steps.size >= 2, "a funnel needs at least two steps")
     import spark.implicits._
     val horizonUs = horizonHours * 3600L * 1000000L
-    val timeoutConf =
-      if (idleTimeout.isDefined) GroupStateTimeout.ProcessingTimeTimeout
-      else GroupStateTimeout.NoTimeout
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState[FunnelState, FunnelProgress](
-        OutputMode.Append, timeoutConf) {
-        (user: Long, rows: Iterator[TypedEvent], state: GroupState[FunnelState]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            var st = state.getOption.orNull
-            val out = Seq.newBuilder[FunnelProgress]
-            rows.toSeq.sortBy(e => (e.ts_us, e.event_id)).foreach { e =>
-              if (st == null) {
-                if (e.event_type == steps.head) {
-                  st = FunnelState(0, e.ts_us, e.ts_us + horizonUs)
-                  out += FunnelProgress(user, 0L, steps.head, e.ts_us)
-                }
-              } else if (st.stage < steps.size - 1 &&
-                  e.event_type == steps(st.stage + 1) &&
-                  e.ts_us >= st.lastTs && e.ts_us <= st.deadline) {
-                st = FunnelState(st.stage + 1, e.ts_us, st.deadline)
-                out += FunnelProgress(user, st.stage.toLong, e.event_type, e.ts_us)
-              }
+    idleFold(events.groupByKey(_.user_id), idleTimeout) {
+      (user: Long, rows: Iterator[TypedEvent], prior: Option[FunnelState]) =>
+        var st = prior.orNull
+        val out = Seq.newBuilder[FunnelProgress]
+        rows.toSeq.sortBy(e => (e.ts_us, e.event_id)).foreach { e =>
+          if (st == null) {
+            if (e.event_type == steps.head) {
+              st = FunnelState(0, e.ts_us, e.ts_us + horizonUs)
+              out += FunnelProgress(user, 0L, steps.head, e.ts_us)
             }
-            if (st != null) state.update(st)
-            idleTimeout.foreach(state.setTimeoutDuration)
-            out.result().iterator
+          } else if (st.stage < steps.size - 1 &&
+              e.event_type == steps(st.stage + 1) &&
+              e.ts_us >= st.lastTs && e.ts_us <= st.deadline) {
+            st = FunnelState(st.stage + 1, e.ts_us, st.deadline)
+            out += FunnelProgress(user, st.stage.toLong, e.event_type, e.ts_us)
           }
-      }
+        }
+        Option(st).map(s => (s, out.result().iterator))
+    }
   }
 
   // --- event-time twins of the walk operators (debounce, funnel) ---
@@ -405,24 +497,35 @@ object StreamOps {
   final case class HllState(n: Long, regs: Array[Byte])
   final case class HllGroupEstimate(group: String, n_items: Long, hll_est: Double)
 
-  /** The ONE HLL register fold, shared by the arrival-time and
-    * event-time stream forms (the cmCells rule): identical arithmetic
+  /** The ONE HLL register fold, shared by [[hllDistinctStream]] and
+    * [[hllDistinctStreamByDay]] (the cmCells rule): identical arithmetic
     * to the batch hllRegisters — hp = low 52 bits of the first
     * little-endian md5 half, register = low p bits, rho = (53−p) minus
     * the bit length of the remaining bits — so the stream estimates
-    * stay bit-identical to the Catalyst sketch. */
-  private def hllFoldItem(regs: Array[Byte], item: String, p: Int): Unit = {
-    val m = 1 << p
-    val rhoMax = 53 - p
-    val hp = graft.functions.Md5Mix.halves(
-      org.apache.spark.unsafe.types.UTF8String.fromString(item))(0) &
-      ((1L << 52) - 1)
-    val reg = (hp & (m - 1)).toInt
-    val w = hp >>> p
-    val rho =
-      if (w == 0L) rhoMax
-      else rhoMax - (64 - java.lang.Long.numberOfLeadingZeros(w))
-    if (rho > regs(reg)) regs(reg) = rho.toByte
+    * stay bit-identical to the Catalyst sketch. Null items are not
+    * values (the batch hllRegisters filter, replicated: they would NPE
+    * the hash and skew n_items); None when the batch holds none. */
+  private def hllFold(prior: Option[HllState], items: Iterator[String],
+      p: Int): Option[HllState] = {
+    val batch = items.filter(_ != null).toArray
+    if (batch.isEmpty) None
+    else {
+      val m = 1 << p
+      val rhoMax = 53 - p
+      val regs = prior.map(_.regs.clone()).getOrElse(new Array[Byte](m))
+      batch.foreach { item =>
+        val hp = graft.functions.Md5Mix.halves(
+          org.apache.spark.unsafe.types.UTF8String.fromString(item))(0) &
+          ((1L << 52) - 1)
+        val reg = (hp & (m - 1)).toInt
+        val w = hp >>> p
+        val rho =
+          if (w == 0L) rhoMax
+          else rhoMax - (64 - java.lang.Long.numberOfLeadingZeros(w))
+        if (rho > regs(reg)) regs(reg) = rho.toByte
+      }
+      Some(HllState(prior.fold(0L)(_.n) + batch.length, regs))
+    }
   }
 
   /** Streaming per-group approximate distinct — the incremental form of
@@ -435,53 +538,18 @@ object StreamOps {
     * the batch [[graft.ops.Sketches.hllDistinct]] over the same rows —
     * asserted in StreamOpsSpec, which is what pins this JVM-side
     * replication of the hash/estimate arithmetic to the Catalyst one.
-    * Emits the updated (group, n_items, estimate) each batch; idle
-    * groups drop state after `idleTimeout` (this file's unbounded-keys
-    * rule). */
+    * Emits the updated (group, n_items, estimate) each batch; a
+    * null-only batch emits nothing. */
   def hllDistinctStream(spark: SparkSession, items: Dataset[KeyedItem],
       p: Int = 9,
       idleTimeout: Option[String] = Some("1 hour")): Dataset[HllGroupEstimate] = {
     import spark.implicits._
-    val m = 1 << p
-    val timeoutConf =
-      if (idleTimeout.isDefined) GroupStateTimeout.ProcessingTimeTimeout
-      else GroupStateTimeout.NoTimeout
-    items.groupByKey(_.group)
-      .flatMapGroupsWithState[HllState, HllGroupEstimate](
-        OutputMode.Append, timeoutConf) {
-        (group: String, rows: Iterator[KeyedItem], state: GroupState[HllState]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val prior = state.getOption.getOrElse(HllState(0L, new Array[Byte](m)))
-            val regs = prior.regs.clone()
-            var n = prior.n
-            val n0 = n
-            // null items are not values — the batch hllRegisters filter,
-            // replicated (they would NPE the hash and skew n_items)
-            rows.filter(_.item != null).foreach { it =>
-              hllFoldItem(regs, it.item, p)
-              n += 1
-            }
-            // a batch of only-null items must not allocate an m-byte
-            // register array for a NEW group (junk-group firehose
-            // hazard) and emits nothing — but a group that already
-            // holds state must have its idle timeout RE-armed: Spark
-            // clears the registered timeout on every invocation of this
-            // function, so skipping the re-set would cancel expiry and
-            // pin the existing registers forever (the exact failure the
-            // guard exists to prevent)
-            if (n == n0) {
-              if (state.exists) idleTimeout.foreach(state.setTimeoutDuration)
-              Iterator.empty
-            } else {
-              state.update(HllState(n, regs))
-              idleTimeout.foreach(state.setTimeoutDuration)
-              Iterator(HllGroupEstimate(group, n, estimateFromRegs(regs, p)))
-            }
-          }
-      }
+    idleFold(items.groupByKey(_.group), idleTimeout) {
+      (group: String, rows: Iterator[KeyedItem], prior: Option[HllState]) =>
+        hllFold(prior, rows.map(_.item), p).map { st =>
+          (st, Iterator(HllGroupEstimate(group, st.n, estimateFromRegs(st.regs, p))))
+        }
+    }
   }
 
   final case class BloomState(words: Array[Long])
@@ -498,10 +566,10 @@ object StreamOps {
     * duplicates always hit their own bits); a novel row can be
     * spuriously dropped at the filter's false-positive rate as the
     * bitmap fills — the knob is numBits, state is numBits/8 bytes per
-    * group forever. Hash positions replicate
+    * group until it idles out. Hash positions replicate
     * ops/Sketches.bloomBits' Kirsch–Mitzenmacher construction (same
     * md5 halves), so a batch-built filter and the stream agree on
-    * membership bit for bit. */
+    * membership bit for bit. Null items are not observations. */
   def bloomDedupStream(spark: SparkSession, items: Dataset[KeyedItem],
       numHashes: Int = 4, numBits: Int = 1 << 16,
       idleTimeout: Option[String] = Some("1 hour")): Dataset[DedupVerdict] = {
@@ -510,129 +578,39 @@ object StreamOps {
       s"numHashes must be in [1,8], got $numHashes")
     require(numBits >= 64 && numBits <= (1 << 22) && (numBits & (numBits - 1)) == 0,
       s"numBits must be a power of two in [64, 2^22], got $numBits")
-    val timeoutConf =
-      if (idleTimeout.isDefined) GroupStateTimeout.ProcessingTimeTimeout
-      else GroupStateTimeout.NoTimeout
-    items.groupByKey(_.group)
-      .flatMapGroupsWithState[BloomState, DedupVerdict](
-        OutputMode.Append, timeoutConf) {
-        (group: String, rows: Iterator[KeyedItem], state: GroupState[BloomState]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val prior = state.getOption
-              .getOrElse(BloomState(new Array[Long](numBits / 64)))
-            val words = prior.words.clone()
-            val mask26 = (1L << 26) - 1
-            val out = rows.filter(_.item != null).map { it =>
-              // Sketches.kmHalves / cmCell, replicated: position_r =
-              // (a + r·b) & (numBits−1) from one md5 per item
-              val h = graft.functions.Md5Mix.halves(
-                org.apache.spark.unsafe.types.UTF8String.fromString(it.item))(0)
-              val a = h & mask26
-              val b = (h >>> 26) & mask26
-              var r = 0
-              var allSet = true
-              while (r < numHashes) {
-                val pos = (a + r * b) & (numBits - 1)
-                val w = (pos >> 6).toInt
-                val bit = 1L << (pos & 63)
-                if ((words(w) & bit) == 0L) { allSet = false; words(w) |= bit }
-                r += 1
-              }
-              DedupVerdict(group, it.item, kept = !allSet)
-            }.toVector
-            // a batch of only-null items is NOT activity: writing state
-            // for it would allocate a permanent numBits/8-byte bitmap
-            // per junk group (this file's unbounded-keys rule). But a
-            // group that ALREADY holds state must have its idle timeout
-            // re-armed — Spark clears the registered timeout on every
-            // invocation, so skipping the re-set would cancel expiry
-            // and pin the bitmap forever
-            if (out.nonEmpty) {
-              state.update(BloomState(words))
-              idleTimeout.foreach(state.setTimeoutDuration)
-            } else if (state.exists) {
-              idleTimeout.foreach(state.setTimeoutDuration)
+    idleFold(items.groupByKey(_.group), idleTimeout) {
+      (group: String, rows: Iterator[KeyedItem], prior: Option[BloomState]) =>
+        val batch = rows.map(_.item).filter(_ != null).toVector
+        if (batch.isEmpty) None
+        else {
+          val words = prior.map(_.words.clone()).getOrElse(new Array[Long](numBits / 64))
+          val mask26 = (1L << 26) - 1
+          val out = batch.map { item =>
+            // Sketches.kmHalves / cmCell, replicated: position_r =
+            // (a + r·b) & (numBits−1) from one md5 per item
+            val h = graft.functions.Md5Mix.halves(
+              org.apache.spark.unsafe.types.UTF8String.fromString(item))(0)
+            val a = h & mask26
+            val b = (h >>> 26) & mask26
+            var r = 0
+            var allSet = true
+            while (r < numHashes) {
+              val pos = (a + r * b) & (numBits - 1)
+              val w = (pos >> 6).toInt
+              val bit = 1L << (pos & 63)
+              if ((words(w) & bit) == 0L) { allSet = false; words(w) |= bit }
+              r += 1
             }
-            out.iterator
+            DedupVerdict(group, item, kept = !allSet)
           }
-      }
+          Some((BloomState(words), out.iterator))
+        }
+    }
   }
 
   final case class CmState(n: Long, counters: Array[Long])
   final case class CmKeyEstimate(group: String, item: String,
       n_items: Long, est_n: Long)
-
-  /** Streaming count-min: live per-group heavy-hitter frequency
-    * tracking with CONSTANT state — the streaming twin of the batch
-    * q62/q72 sketches (ops/Sketches.countMinCounters), folding each
-    * arriving item into a fixed depth×width counter table per group
-    * (depth·width·8 bytes forever, 32 KB at the defaults, regardless of
-    * key cardinality). After folding a batch it emits the CURRENT
-    * estimate for each distinct item seen in that batch — one-sided
-    * (est ≥ true count, collisions only inflate), exactly the batch
-    * guarantee running live.
-    *
-    * Cell positions replicate Sketches' Kirsch–Mitzenmacher
-    * construction from the same md5 halves (a + r·b over the first
-    * little-endian half), so after any batch prefix the stream's
-    * estimate for a key equals ops/Sketches.countMinEstimate probed
-    * against a batch sketch of the same rows, bit for bit — the
-    * merge-law bridge between the live and offline forms, asserted in
-    * StreamOpsSpec. Null items and null-only batches follow the
-    * file-wide unbounded-keys rule: no fold, no state allocation, no
-    * timeout refresh, no emission. */
-  def countMinStream(spark: SparkSession, items: Dataset[KeyedItem],
-      depth: Int = 4, width: Int = 1024,
-      idleTimeout: Option[String] = Some("1 hour")): Dataset[CmKeyEstimate] = {
-    import spark.implicits._
-    require(depth >= 1 && depth <= 8, s"depth must be in [1,8], got $depth")
-    require(width >= 2 && width <= (1 << 26) && (width & (width - 1)) == 0,
-      s"width must be a power of two in [2, 2^26], got $width")
-    val timeoutConf =
-      if (idleTimeout.isDefined) GroupStateTimeout.ProcessingTimeTimeout
-      else GroupStateTimeout.NoTimeout
-    items.groupByKey(_.group)
-      .flatMapGroupsWithState[CmState, CmKeyEstimate](
-        OutputMode.Append, timeoutConf) {
-        (group: String, rows: Iterator[KeyedItem], state: GroupState[CmState]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val prior = state.getOption
-              .getOrElse(CmState(0L, new Array[Long](depth * width)))
-            val counters = prior.counters.clone()
-            var n = prior.n
-            def cells(item: String): Array[Int] = cmCells(item, depth, width)
-            // distinct batch items in arrival order → deterministic
-            // emission order; estimates are computed AFTER the whole
-            // batch folds, so every emission reflects the full prefix
-            val seen = new scala.collection.mutable.LinkedHashSet[String]
-            rows.filter(_.item != null).foreach { it =>
-              cells(it.item).foreach(counters(_) += 1)
-              n += 1
-              seen += it.item
-            }
-            if (seen.isEmpty) {
-              // no new-group allocation for junk traffic, but an
-              // EXISTING group's idle timeout must be re-armed — Spark
-              // clears the registered timeout on every invocation, so
-              // skipping the re-set would pin the counters forever
-              if (state.exists) idleTimeout.foreach(state.setTimeoutDuration)
-              Iterator.empty
-            } else {
-              state.update(CmState(n, counters))
-              idleTimeout.foreach(state.setTimeoutDuration)
-              seen.iterator.map { item =>
-                CmKeyEstimate(group, item, n, cells(item).map(counters).min)
-              }
-            }
-          }
-      }
-  }
 
   /** The ONE count-min cell derivation, shared by every CMS form here
     * (arrival-time fold, probe, and the event-time day variant) — a
@@ -648,9 +626,84 @@ object StreamOps {
       r * width + ((a + r * b) & (width - 1)).toInt)
   }
 
+  /** The ONE count-min fold, shared by [[countMinStream]] and
+    * [[countMinStreamByDay]]: every non-null item adds one to its
+    * [[cmCells]]; null items are not observations (None when the batch
+    * holds none). Returns the new state and, for each distinct item of
+    * the batch in arrival order (deterministic emission order), its
+    * estimate over the counters AFTER the whole batch folds — every
+    * emission reflects the full prefix. */
+  private def cmFold(prior: Option[CmState], items: Iterator[String],
+      depth: Int, width: Int): Option[(CmState, Iterator[(String, Long)])] = {
+    val batch = items.filter(_ != null).toArray
+    if (batch.isEmpty) None
+    else {
+      val counters = prior.map(_.counters.clone()).getOrElse(new Array[Long](depth * width))
+      batch.foreach(item => cmCells(item, depth, width).foreach(counters(_) += 1))
+      Some((CmState(prior.fold(0L)(_.n) + batch.length, counters),
+        batch.distinct.iterator.map(item =>
+          item -> cmCells(item, depth, width).map(counters).min)))
+    }
+  }
+
+  /** Streaming count-min: live per-group heavy-hitter frequency
+    * tracking with CONSTANT state — the streaming twin of the batch
+    * q62/q72 sketches (ops/Sketches.countMinCounters), folding each
+    * arriving item into a fixed depth×width counter table per group
+    * (depth·width·8 bytes, 32 KB at the defaults, regardless of key
+    * cardinality). After folding a batch it emits the CURRENT
+    * estimate for each distinct item seen in that batch — one-sided
+    * (est ≥ true count, collisions only inflate), exactly the batch
+    * guarantee running live.
+    *
+    * Cell positions replicate Sketches' Kirsch–Mitzenmacher
+    * construction from the same md5 halves (a + r·b over the first
+    * little-endian half), so after any batch prefix the stream's
+    * estimate for a key equals ops/Sketches.countMinEstimate probed
+    * against a batch sketch of the same rows, bit for bit — the
+    * merge-law bridge between the live and offline forms, asserted in
+    * StreamOpsSpec. */
+  def countMinStream(spark: SparkSession, items: Dataset[KeyedItem],
+      depth: Int = 4, width: Int = 1024,
+      idleTimeout: Option[String] = Some("1 hour")): Dataset[CmKeyEstimate] = {
+    import spark.implicits._
+    require(depth >= 1 && depth <= 8, s"depth must be in [1,8], got $depth")
+    require(width >= 2 && width <= (1 << 26) && (width & (width - 1)) == 0,
+      s"width must be a power of two in [2, 2^26], got $width")
+    idleFold(items.groupByKey(_.group), idleTimeout) {
+      (group: String, rows: Iterator[KeyedItem], prior: Option[CmState]) =>
+        cmFold(prior, rows.map(_.item), depth, width).map { case (st, ests) =>
+          (st, ests.map { case (item, est) => CmKeyEstimate(group, item, st.n, est) })
+        }
+    }
+  }
+
   final case class ZscoreState(n: Long, s: Long, ss: Long)
   final case class ZscoreBatch(group: String, n: Long, sum: Long,
       sumsq: Long, n_anomalies: Long)
+
+  /** The ONE z-score fold, shared by [[zscoreStream]] and
+    * [[zscoreStreamByDay]]: the batch's non-null values fold into the
+    * moments first, then each is tested against the post-fold moments
+    * with the exact integer inequality (v·n − s)² > k²·(n·ss − s²).
+    * Returns the new moments and the flagged count; None when the batch
+    * holds no value. */
+  private def zscoreFold(prior: Option[ZscoreState],
+      values: Iterator[java.lang.Long], k2: Long): Option[(ZscoreState, Long)] = {
+    val batch = values.filter(_ != null).map(_.longValue()).toArray
+    if (batch.isEmpty) None
+    else {
+      val st = prior.getOrElse(ZscoreState(0L, 0L, 0L))
+      var n = st.n; var s = st.s; var ss = st.ss
+      batch.foreach { v => n += 1; s += v; ss += v * v }
+      val rhs = k2 * (n * ss - s * s)
+      val flagged = batch.count { v =>
+        val dev = v * n - s
+        dev * dev > rhs
+      }
+      Some((ZscoreState(n, s, ss), flagged.toLong))
+    }
+  }
 
   /** Streaming σ-anomaly monitor — the live twin of
     * EventAnalytics.anomalousDays, same exact integer inequality
@@ -660,57 +713,42 @@ object StreamOps {
     * asserted in spec). Values fold first, then every value of the
     * incoming batch is tested against the post-fold moments, exactly
     * how the batch op scores a day against statistics that include it.
-    * Constant state: three longs per group, ever. Emits one summary
-    * row per (group, batch): the moments plus how many of the batch's
-    * values broke k·σ. Overflow bound: Σv² < 2⁶³ per group (the
-    * anomalousDays bucket rule — pre-scale coarse values).
-    *
-    * Guards (the countMinStream/hllDistinctStream contract): a
-    * null-only batch allocates no state for a new group and emits
-    * nothing, but RE-arms an existing group's idle timeout — Spark
-    * clears the registered timeout on every invocation, so an early
-    * return that skips the re-set would pin the moments forever. */
+    * Constant state: three longs per group. Emits one summary row per
+    * (group, batch with a value): the moments plus how many of the
+    * batch's values broke k·σ. Overflow bound: Σv² < 2⁶³ per group (the
+    * anomalousDays bucket rule — pre-scale coarse values). */
   def zscoreStream(spark: SparkSession, values: Dataset[KeyedValue],
       sigmas: Int = 2,
       idleTimeout: Option[String] = Some("1 hour")): Dataset[ZscoreBatch] = {
     import spark.implicits._
     require(sigmas >= 1, s"sigmas must be >= 1, got $sigmas")
     val k2 = sigmas.toLong * sigmas
-    val timeoutConf =
-      if (idleTimeout.isDefined) GroupStateTimeout.ProcessingTimeTimeout
-      else GroupStateTimeout.NoTimeout
-    values.groupByKey(_.group)
-      .flatMapGroupsWithState[ZscoreState, ZscoreBatch](
-        OutputMode.Append, timeoutConf) {
-        (group: String, rows: Iterator[KeyedValue], state: GroupState[ZscoreState]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val prior = state.getOption.getOrElse(ZscoreState(0L, 0L, 0L))
-            val batch = rows.filter(_.value != null).map(_.value.longValue()).toArray
-            if (batch.isEmpty) {
-              if (state.exists) idleTimeout.foreach(state.setTimeoutDuration)
-              Iterator.empty
-            } else {
-              var n = prior.n; var s = prior.s; var ss = prior.ss
-              batch.foreach { v => n += 1; s += v; ss += v * v }
-              val rhs = k2 * (n * ss - s * s)
-              val flagged = batch.count { v =>
-                val dev = v * n - s
-                dev * dev > rhs
-              }
-              state.update(ZscoreState(n, s, ss))
-              idleTimeout.foreach(state.setTimeoutDuration)
-              Iterator(ZscoreBatch(group, n, s, ss, flagged.toLong))
-            }
-          }
-      }
+    idleFold(values.groupByKey(_.group), idleTimeout) {
+      (group: String, rows: Iterator[KeyedValue], prior: Option[ZscoreState]) =>
+        zscoreFold(prior, rows.map(_.value), k2).map { case (st, flagged) =>
+          (st, Iterator(ZscoreBatch(group, st.n, st.s, st.ss, flagged)))
+        }
+    }
   }
   final case class KeyedValue(group: String, value: java.lang.Long)
 
   final case class EwmaState(t: Long, recent: Array[Long])
   final case class EwmaPoint(group: String, t: Long, value: Long, ewma: Long)
+
+  /** Push one value onto the ≤16-long recency window (recent(0) is the
+    * newest) and return the new window with its smoothed value: the
+    * batch op's lag(value, j) · 2^(15−j) ladder, floored by >> 16 — j
+    * indexes recency directly. Shared by [[ewmaStream]] and
+    * [[ewmaStreamByDay]]. */
+  private def ewmaPush(recent: Array[Long], v: Long): (Array[Long], Long) = {
+    val next = (v +: recent).take(16)
+    var acc = 0L
+    var j = 0
+    while (j < next.length) {
+      acc += next(j) * (1L << (15 - j)); j += 1
+    }
+    (next, acc >> 16)
+  }
 
   /** Streaming exact EWMA (α = 1/2, window 16) — the live twin of
     * EventAnalytics.ewmaSmooth: same power-of-two weight ladder, same
@@ -719,50 +757,28 @@ object StreamOps {
     * window over the completed series (spec-asserted). Values smooth in
     * ARRIVAL order within each batch (the op's order contract — q88's
     * batch twin orders by day; feed the stream the same order).
-    * Constant state: at most 16 longs per group (the trailing window),
-    * with the null-batch / timeout-re-arm guards of the sketch
-    * streams. */
+    * Constant state: at most 16 longs per group (the trailing window);
+    * null values are not observations. */
   def ewmaStream(spark: SparkSession, values: Dataset[KeyedValue],
       idleTimeout: Option[String] = Some("1 hour")): Dataset[EwmaPoint] = {
     import spark.implicits._
-    val timeoutConf =
-      if (idleTimeout.isDefined) GroupStateTimeout.ProcessingTimeTimeout
-      else GroupStateTimeout.NoTimeout
-    values.groupByKey(_.group)
-      .flatMapGroupsWithState[EwmaState, EwmaPoint](
-        OutputMode.Append, timeoutConf) {
-        (group: String, rows: Iterator[KeyedValue], state: GroupState[EwmaState]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val prior = state.getOption.getOrElse(EwmaState(0L, Array.empty[Long]))
-            val batch = rows.filter(_.value != null).map(_.value.longValue()).toArray
-            if (batch.isEmpty) {
-              if (state.exists) idleTimeout.foreach(state.setTimeoutDuration)
-              Iterator.empty
-            } else {
-              // recent(0) is the newest value; identical ladder to the
-              // batch op's lag(value, j) * 2^(15-j) — here j indexes
-              // recency directly
-              var recent = prior.recent
-              var t = prior.t
-              val out = batch.map { v =>
-                recent = (v +: recent).take(16)
-                var acc = 0L
-                var j = 0
-                while (j < recent.length) {
-                  acc += recent(j) * (1L << (15 - j)); j += 1
-                }
-                t += 1
-                EwmaPoint(group, t, v, acc >> 16)
-              }
-              state.update(EwmaState(t, recent))
-              idleTimeout.foreach(state.setTimeoutDuration)
-              out.iterator
-            }
+    idleFold(values.groupByKey(_.group), idleTimeout) {
+      (group: String, rows: Iterator[KeyedValue], prior: Option[EwmaState]) =>
+        val batch = rows.filter(_.value != null).map(_.value.longValue()).toArray
+        if (batch.isEmpty) None
+        else {
+          val st = prior.getOrElse(EwmaState(0L, Array.empty[Long]))
+          var recent = st.recent
+          var t = st.t
+          val out = batch.map { v =>
+            val (next, ewma) = ewmaPush(recent, v)
+            recent = next
+            t += 1
+            EwmaPoint(group, t, v, ewma)
           }
-      }
+          Some((EwmaState(t, recent), out.iterator))
+        }
+    }
   }
 
   final case class TimedValue(group: String, ts: java.sql.Timestamp,
@@ -770,98 +786,31 @@ object StreamOps {
   final case class ZscoreDayBatch(group: String, day: String, n: Long,
       sum: Long, sumsq: Long, n_anomalies: Long)
 
-  private def utcDayIdx(ts: java.sql.Timestamp): Long =
-    Math.floorDiv(ts.getTime, 86400000L)
-  private def utcDayString(dayIdx: Long): String =
-    java.time.LocalDate.ofEpochDay(dayIdx).toString
-
-  /** Re-arm a (group, day) seal. The day's end is the natural seal
-    * time, but the clamp is load-bearing: flatMapGroupsWithState
-    * admits late rows against the PREVIOUS batch's watermark while
-    * setTimeoutTimestamp validates against the CURRENT one. A late
-    * row for a still-open day, arriving in the very batch where the
-    * watermark jumps past that day's end (the backfill scenario these
-    * operators exist for), passes the filter and folds — then a bare
-    * setTimeoutTimestamp(dayEndMs) throws IllegalArgumentException
-    * and kills the query, deterministically again on restart. Clamped
-    * just past the current watermark, the seal instead fires on the
-    * next watermark advance. */
-  private[streaming] def armDaySeal(state: GroupState[_], dayEndMs: Long): Unit =
-    state.setTimeoutTimestamp(
-      math.max(dayEndMs, state.getCurrentWatermarkMs() + 1L))
-
   /** EVENT-TIME twin of [[zscoreStream]]: moments keyed on
     * (group, event-time UTC day) with a watermark, so a late event
     * folds into the day it HAPPENED in — not the day it arrived in,
     * which is what the processing-time form would charge at real
     * ingestion skew. State: three longs per (group, open day), sealed
-    * by an event-time timeout once the watermark passes the day's end
-    * (bounded by groups × days inside the lateness horizon, not by
-    * history). Emits the day's post-fold moments each batch the day
-    * receives data — the monotone n is the marker for selecting a
-    * day's current moments from an Append sink (the ZscoreBatch
-    * convention), and the final emission for a day bit-equals the
-    * batch aggregate over every row the watermark admitted
-    * (spec-asserted, late arrivals included).
-    *
-    * Sealed-day guard: flatMapGroupsWithState does NOT pre-filter
-    * late input the way windowed aggregations do — an over-late event
-    * (day end already behind the watermark) arriving after the
-    * timeout removed the day's state would otherwise seed FRESH
-    * moments for a sealed day and emit nonsense. Such rows are
-    * dropped explicitly; within the horizon, late rows fold
-    * normally. */
+    * once the watermark passes the day's end (bounded by groups × days
+    * inside the lateness horizon, not by history). Emits the day's
+    * post-fold moments each batch the day receives data — the monotone
+    * n is the marker for selecting a day's current moments from an
+    * Append sink (the ZscoreBatch convention), and the final emission
+    * for a day bit-equals the batch aggregate over every row the
+    * watermark admitted (spec-asserted, late arrivals included).
+    * Over-late rows for a sealed day are dropped; within the horizon,
+    * late rows fold normally. */
   def zscoreStreamByDay(spark: SparkSession, values: Dataset[TimedValue],
       lateness: String, sigmas: Int = 2): Dataset[ZscoreDayBatch] = {
     import spark.implicits._
     require(sigmas >= 1, s"sigmas must be >= 1, got $sigmas")
     val k2 = sigmas.toLong * sigmas
-    values
-      .where(col("ts").isNotNull)
-      .withWatermark("ts", lateness)
-      .groupByKey(v => (v.group, utcDayIdx(v.ts)))
-      .flatMapGroupsWithState[ZscoreState, ZscoreDayBatch](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (key: (String, Long), rows: Iterator[TimedValue],
-            state: GroupState[ZscoreState]) =>
-          val (group, dayIdx) = key
-          val dayEndMs = (dayIdx + 1) * 86400000L
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else if (!state.exists &&
-              state.getCurrentWatermarkMs() >= dayEndMs) {
-            // sealed day: its state is gone (or was never created) and
-            // the watermark guarantees the batch aggregate no longer
-            // counts rows this late — drop rather than resurrect
-            Iterator.empty
-          } else {
-            val prior = state.getOption.getOrElse(ZscoreState(0L, 0L, 0L))
-            val batch = rows.filter(_.value != null)
-              .map(_.value.longValue()).toArray
-            if (batch.isEmpty) {
-              // Spark clears the registered timeout on EVERY invocation
-              // — a null-only batch for an open day must re-arm the
-              // seal or the day's moments would pin forever
-              if (state.exists) armDaySeal(state, dayEndMs)
-              Iterator.empty
-            } else {
-              var n = prior.n; var s = prior.s; var ss = prior.ss
-              batch.foreach { v => n += 1; s += v; ss += v * v }
-              val rhs = k2 * (n * ss - s * s)
-              val flagged = batch.count { v =>
-                val dev = v * n - s
-                dev * dev > rhs
-              }
-              state.update(ZscoreState(n, s, ss))
-              // seal when the watermark passes the day's end; the
-              // watermark already encodes the lateness allowance
-              armDaySeal(state, dayEndMs)
-              Iterator(ZscoreDayBatch(group, utcDayString(dayIdx),
-                n, s, ss, flagged.toLong))
-            }
-          }
-      }
+    dayFold(values, lateness)(v => (v.group, v.ts)) {
+      (key: (String, String), rows: Iterator[TimedValue], prior: Option[ZscoreState]) =>
+        zscoreFold(prior, rows.map(_.value), k2).map { case (st, flagged) =>
+          (st, Iterator(ZscoreDayBatch(key._1, key._2, st.n, st.s, st.ss, flagged)))
+        }
+    }
   }
 
   final case class EwmaDayState(t: Long, recent: Array[Long],
@@ -884,7 +833,7 @@ object StreamOps {
     * slots). The emitted series after any batch split bit-equals
     * ewmaSmooth over the same (group, day) totals (spec-asserted with
     * late arrivals). Over-late rows for an already-closed day are
-    * dropped (the zscoreStreamByDay sealed-day guard — folding them
+    * dropped (the [[dayFoldStep]] sealed-day guard — folding them
     * would change history the ladder already consumed).
     *
     * The group's state has no idle timeout: after all pending days
@@ -923,14 +872,10 @@ object StreamOps {
           var recent = prior.recent
           var t = prior.t
           val out = ripe.toSeq.sortBy(_._1).map { case (d, total) =>
-            recent = (total +: recent).take(16)
-            var acc = 0L
-            var j = 0
-            while (j < recent.length) {
-              acc += recent(j) * (1L << (15 - j)); j += 1
-            }
+            val (next, ewma) = ewmaPush(recent, total)
+            recent = next
             t += 1
-            EwmaDayPoint(group, utcDayString(d), t, total, acc >> 16)
+            EwmaDayPoint(group, utcDayString(d), t, total, ewma)
           }
           state.update(EwmaDayState(t, recent, open))
           // wake when the earliest open day becomes ripe; with no open
@@ -959,6 +904,27 @@ object StreamOps {
   final case class TopKEntry(group: String, n: Long, rank: Long, item: String,
       score: Long)
 
+  /** The ONE top-k fold, shared by [[topKStream]] and
+    * [[topKStreamByDay]]: per-item max across the prior entries and the
+    * batch's (item, score) pairs, re-trimmed to k under
+    * [[leaderboardOrdering]]; n counts the observations. Rows with a
+    * null item or score are not observations (None when the batch
+    * holds none). */
+  private def topKFold(prior: Option[TopKState],
+      scores: Iterator[(String, java.lang.Long)], k: Int): Option[TopKState] = {
+    val batch = scores.collect {
+      case (item, score) if item != null && score != null => item -> score.longValue()
+    }.toArray
+    if (batch.isEmpty) None
+    else {
+      val st = prior.getOrElse(TopKState(0L, Array.empty))
+      val merged = (st.entries ++ batch)
+        .groupBy(_._1).view.mapValues(_.map(_._2).max).toArray
+        .sorted(leaderboardOrdering).take(k)
+      Some(TopKState(st.n + batch.length, merged))
+    }
+  }
+
   /** Streaming exact top-k leaderboard per group: constant state of at
     * most k (item, score) entries, ordered (score desc, item asc).
     * After any prefix the emission equals the batch top-k over the
@@ -972,46 +938,19 @@ object StreamOps {
     * row carrying the monotone observation count `n` so an Append
     * sink's consumers can select the CURRENT leaderboard
     * (WHERE n = max(n) per group) — the ZscoreBatch/EwmaPoint marker
-    * convention. Null items/scores are not observations; the
-    * null-batch/timeout re-arm guards of the sketch streams apply. */
+    * convention. Null items/scores are not observations. */
   def topKStream(spark: SparkSession, scores: Dataset[KeyedScore], k: Int,
       idleTimeout: Option[String] = Some("1 hour")): Dataset[TopKEntry] = {
     import spark.implicits._
     require(k >= 1 && k <= 10000, s"k must be in [1, 10000], got $k")
-    val timeoutConf =
-      if (idleTimeout.isDefined) GroupStateTimeout.ProcessingTimeTimeout
-      else GroupStateTimeout.NoTimeout
-    implicit val ord: Ordering[(String, Long)] = leaderboardOrdering
-    scores.groupByKey(_.group)
-      .flatMapGroupsWithState[TopKState, TopKEntry](
-        OutputMode.Append, timeoutConf) {
-        (group: String, rows: Iterator[KeyedScore], state: GroupState[TopKState]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val batch = rows
-              .filter(r => r.item != null && r.score != null)
-              .map(r => r.item -> r.score.longValue()).toArray
-            if (batch.isEmpty) {
-              if (state.exists) idleTimeout.foreach(state.setTimeoutDuration)
-              Iterator.empty
-            } else {
-              val prior = state.getOption.getOrElse(TopKState(0L, Array.empty))
-              // fold: per-item max across prior entries + batch, then
-              // re-trim to k under (score desc, item asc)
-              val merged = (prior.entries ++ batch)
-                .groupBy(_._1).view.mapValues(_.map(_._2).max).toArray
-                .sorted(ord).take(k)
-              val n = prior.n + batch.length
-              state.update(TopKState(n, merged))
-              idleTimeout.foreach(state.setTimeoutDuration)
-              merged.iterator.zipWithIndex.map { case ((item, score), i) =>
-                TopKEntry(group, n, (i + 1).toLong, item, score)
-              }
-            }
-          }
-      }
+    idleFold(scores.groupByKey(_.group), idleTimeout) {
+      (group: String, rows: Iterator[KeyedScore], prior: Option[TopKState]) =>
+        topKFold(prior, rows.map(r => (r.item, r.score)), k).map { st =>
+          (st, st.entries.iterator.zipWithIndex.map { case ((item, score), i) =>
+            TopKEntry(group, st.n, (i + 1).toLong, item, score)
+          })
+        }
+    }
   }
 
   final case class TimedItem(group: String, ts: java.sql.Timestamp,
@@ -1024,26 +963,17 @@ object StreamOps {
     * lands in the day it HAPPENED in — the form a daily traffic /
     * abuse counter actually wants, where the arrival-time sketch would
     * smear a backfill across the wrong days. State: depth×width longs
-    * per (group, open day), sealed by an event-time timeout once the
-    * watermark passes the day's end — bounded by groups × days inside
-    * the lateness horizon, NOT by history (the arrival-time form's
-    * state is bounded only by its idle timeout). Emits (day, item,
-    * post-fold estimate) for each distinct item of the batch, with the
-    * day's monotone n as the currency marker (the ZscoreDayBatch
-    * convention: a day's CURRENT estimates are its max-n emission).
-    * Bit-compat law, spec-asserted: a day's final emission equals the
-    * batch count-min over every row the watermark admitted for that
-    * day — same cells ([[cmCells]]), same counters, late arrivals
-    * included.
-    *
-    * Sealed-day guard (the zscoreStreamByDay contract):
-    * flatMapGroupsWithState does not pre-filter late input — an
-    * over-late row whose day's state the timeout already removed would
-    * seed a FRESH sketch counting only stragglers and emit nonsense;
-    * such rows are dropped explicitly. Null items are not
-    * observations; a null-only batch allocates nothing for a new key
-    * but re-arms an open day's seal (Spark clears the registered
-    * timeout on every invocation). */
+    * per (group, open day), sealed once the watermark passes the day's
+    * end — bounded by groups × days inside the lateness horizon, NOT by
+    * history (the arrival-time form's state is bounded only by its idle
+    * timeout). Emits (day, item, post-fold estimate) for each distinct
+    * item of the batch, with the day's monotone n as the currency marker
+    * (the ZscoreDayBatch convention: a day's CURRENT estimates are its
+    * max-n emission). Bit-compat law, spec-asserted: a day's final
+    * emission equals the batch count-min over every row the watermark
+    * admitted for that day — same cells ([[cmCells]]), same counters,
+    * late arrivals included. Over-late rows for a sealed day are
+    * dropped; null items are not observations. */
   def countMinStreamByDay(spark: SparkSession, items: Dataset[TimedItem],
       lateness: String, depth: Int = 4,
       width: Int = 1024): Dataset[CmDayEstimate] = {
@@ -1051,47 +981,14 @@ object StreamOps {
     require(depth >= 1 && depth <= 8, s"depth must be in [1,8], got $depth")
     require(width >= 2 && width <= (1 << 26) && (width & (width - 1)) == 0,
       s"width must be a power of two in [2, 2^26], got $width")
-    items
-      .where(col("ts").isNotNull)
-      .withWatermark("ts", lateness)
-      .groupByKey(it => (it.group, utcDayIdx(it.ts)))
-      .flatMapGroupsWithState[CmState, CmDayEstimate](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (key: (String, Long), rows: Iterator[TimedItem],
-            state: GroupState[CmState]) =>
-          val (group, dayIdx) = key
-          val dayEndMs = (dayIdx + 1) * 86400000L
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else if (!state.exists &&
-              state.getCurrentWatermarkMs() >= dayEndMs) {
-            Iterator.empty // sealed day — drop, never resurrect
-          } else {
-            val prior = state.getOption
-              .getOrElse(CmState(0L, new Array[Long](depth * width)))
-            val counters = prior.counters.clone()
-            var n = prior.n
-            val seen = new scala.collection.mutable.LinkedHashSet[String]
-            rows.filter(_.item != null).foreach { it =>
-              cmCells(it.item, depth, width).foreach(counters(_) += 1)
-              n += 1
-              seen += it.item
-            }
-            if (seen.isEmpty) {
-              if (state.exists) armDaySeal(state, dayEndMs)
-              Iterator.empty
-            } else {
-              state.update(CmState(n, counters))
-              armDaySeal(state, dayEndMs)
-              val day = utcDayString(dayIdx)
-              seen.iterator.map { item =>
-                CmDayEstimate(group, day, item, n,
-                  cmCells(item, depth, width).map(counters).min)
-              }
-            }
-          }
-      }
+    dayFold(items, lateness)(it => (it.group, it.ts)) {
+      (key: (String, String), rows: Iterator[TimedItem], prior: Option[CmState]) =>
+        cmFold(prior, rows.map(_.item), depth, width).map { case (st, ests) =>
+          (st, ests.map { case (item, est) =>
+            CmDayEstimate(key._1, key._2, item, st.n, est)
+          })
+        }
+    }
   }
 
   final case class TimedScore(group: String, ts: java.sql.Timestamp,
@@ -1109,51 +1006,19 @@ object StreamOps {
     * monotone n selecting the day's current board from an Append sink.
     * Bit-compat law, spec-asserted: a day's final board equals the
     * batch top-k (score desc, item asc) over its watermark-admitted
-    * per-item maxima. Sealed-day guard and null/timeout re-arm rules as
-    * [[countMinStreamByDay]]. */
+    * per-item maxima. Over-late rows for a sealed day are dropped. */
   def topKStreamByDay(spark: SparkSession, scores: Dataset[TimedScore],
       k: Int, lateness: String): Dataset[TopKDayEntry] = {
     import spark.implicits._
     require(k >= 1 && k <= 10000, s"k must be in [1, 10000], got $k")
-    implicit val ord: Ordering[(String, Long)] = leaderboardOrdering
-    scores
-      .where(col("ts").isNotNull)
-      .withWatermark("ts", lateness)
-      .groupByKey(s => (s.group, utcDayIdx(s.ts)))
-      .flatMapGroupsWithState[TopKState, TopKDayEntry](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (key: (String, Long), rows: Iterator[TimedScore],
-            state: GroupState[TopKState]) =>
-          val (group, dayIdx) = key
-          val dayEndMs = (dayIdx + 1) * 86400000L
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else if (!state.exists &&
-              state.getCurrentWatermarkMs() >= dayEndMs) {
-            Iterator.empty // sealed day — drop, never resurrect
-          } else {
-            val batch = rows
-              .filter(r => r.item != null && r.score != null)
-              .map(r => r.item -> r.score.longValue()).toArray
-            if (batch.isEmpty) {
-              if (state.exists) armDaySeal(state, dayEndMs)
-              Iterator.empty
-            } else {
-              val prior = state.getOption.getOrElse(TopKState(0L, Array.empty))
-              val merged = (prior.entries ++ batch)
-                .groupBy(_._1).view.mapValues(_.map(_._2).max).toArray
-                .sorted(ord).take(k)
-              val n = prior.n + batch.length
-              state.update(TopKState(n, merged))
-              armDaySeal(state, dayEndMs)
-              val day = utcDayString(dayIdx)
-              merged.iterator.zipWithIndex.map { case ((item, score), i) =>
-                TopKDayEntry(group, day, n, (i + 1).toLong, item, score)
-              }
-            }
-          }
-      }
+    dayFold(scores, lateness)(s => (s.group, s.ts)) {
+      (key: (String, String), rows: Iterator[TimedScore], prior: Option[TopKState]) =>
+        topKFold(prior, rows.map(r => (r.item, r.score)), k).map { st =>
+          (st, st.entries.iterator.zipWithIndex.map { case ((item, score), i) =>
+            TopKDayEntry(key._1, key._2, st.n, (i + 1).toLong, item, score)
+          })
+        }
+    }
   }
 
   final case class HllDayEstimate(group: String, day: String,
@@ -1164,54 +1029,24 @@ object StreamOps {
     * users (the q98 sliding-distinct building block running as a
     * stream), where the arrival-time form counts a backfill into the
     * wrong day. Same register fold as every HLL in the repo
-    * ([[hllFoldItem]] — the batch bit-compat law holds per day:
-    * a day's final estimate equals [[graft.ops.Sketches.hllDistinct]]
-    * over its watermark-admitted rows, spec-asserted with late
-    * arrivals). State: m bytes per (group, open day), sealed by the
-    * event-time timeout — bounded by groups × days inside the lateness
-    * horizon. Sealed-day guard, null-item and timeout re-arm rules as
-    * [[countMinStreamByDay]]; the day's monotone n_items is the
-    * currency marker for Append-sink consumers. */
+    * ([[hllFold]] — the batch bit-compat law holds per day: a day's
+    * final estimate equals [[graft.ops.Sketches.hllDistinct]] over its
+    * watermark-admitted rows, spec-asserted with late arrivals). State:
+    * m bytes per (group, open day), sealed once the watermark passes
+    * the day's end — bounded by groups × days inside the lateness
+    * horizon. Over-late rows for a sealed day are dropped; the day's
+    * monotone n_items is the currency marker for Append-sink
+    * consumers. */
   def hllDistinctStreamByDay(spark: SparkSession, items: Dataset[TimedItem],
       lateness: String, p: Int = 9): Dataset[HllDayEstimate] = {
     import spark.implicits._
-    val m = 1 << p
-    items
-      .where(col("ts").isNotNull)
-      .withWatermark("ts", lateness)
-      .groupByKey(it => (it.group, utcDayIdx(it.ts)))
-      .flatMapGroupsWithState[HllState, HllDayEstimate](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (key: (String, Long), rows: Iterator[TimedItem],
-            state: GroupState[HllState]) =>
-          val (group, dayIdx) = key
-          val dayEndMs = (dayIdx + 1) * 86400000L
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else if (!state.exists &&
-              state.getCurrentWatermarkMs() >= dayEndMs) {
-            Iterator.empty // sealed day — drop, never resurrect
-          } else {
-            val prior = state.getOption.getOrElse(HllState(0L, new Array[Byte](m)))
-            val regs = prior.regs.clone()
-            var n = prior.n
-            val n0 = n
-            rows.filter(_.item != null).foreach { it =>
-              hllFoldItem(regs, it.item, p)
-              n += 1
-            }
-            if (n == n0) {
-              if (state.exists) armDaySeal(state, dayEndMs)
-              Iterator.empty
-            } else {
-              state.update(HllState(n, regs))
-              armDaySeal(state, dayEndMs)
-              Iterator(HllDayEstimate(group, utcDayString(dayIdx), n,
-                estimateFromRegs(regs, p)))
-            }
-          }
-      }
+    dayFold(items, lateness)(it => (it.group, it.ts)) {
+      (key: (String, String), rows: Iterator[TimedItem], prior: Option[HllState]) =>
+        hllFold(prior, rows.map(_.item), p).map { st =>
+          (st, Iterator(HllDayEstimate(key._1, key._2, st.n,
+            estimateFromRegs(st.regs, p))))
+        }
+    }
   }
 
   /** hllEstimate's exact-integer arithmetic on a dense register array —

@@ -37,9 +37,11 @@ class PropertySpec extends SparkSpec {
       val df = ms.map(m => Tuple1(m)).toDF("mes")
       val checks = Seq(Quality.InRange("mes", 1, 12))
       val violations = ms.count(m => m < 1 || m > 12)
-      val gateResult = scala.util.Try(Quality.runGate(df, checks))
+      val (observed, obs) = Quality.observedChecks(df, checks)
+      observed.collect()
+      val gateResult = scala.util.Try(Quality.assertObserved(obs, checks))
       assert(gateResult.isSuccess == (violations == 0))
-      assert(Quality.measure(df, checks)("in_range(mes,1.0,12.0)") == violations.toLong)
+      assert(obs.get("in_range(mes,1.0,12.0)") == violations.toLong)
     }
   }
 

@@ -2,6 +2,7 @@ package graft.streaming
 
 import graft.SparkSpec
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.{Dataset, Encoder}
 import org.apache.spark.sql.functions._
 import java.sql.Timestamp
 
@@ -498,28 +499,55 @@ class StreamOpsSpec extends SparkSpec {
       "no false positives generated — bitmap too large to exercise agreement")
   }
 
-  test("streaming HLL: a null-only batch allocates no state and emits no row") {
-    import spark.implicits._
-    val mem = MemoryStream[StreamOps.KeyedItem](spark, 1)
-    val out = StreamOps.hllDistinctStream(spark, mem.toDS(), p = 9,
-      idleTimeout = None)
-    val q = out.writeStream.format("memory").queryName("hll_nulls")
-      .outputMode("append").start()
-    // junk group: only null items — must not emit (and must not pin an
-    // m-byte register array; the emit is the observable proxy)
-    mem.addData(StreamOps.KeyedItem("junk", null),
-      StreamOps.KeyedItem("junk", null),
-      StreamOps.KeyedItem("real", "k1"))
-    q.processAllAvailable()
-    // second null-only batch against a group WITH state: nothing new
-    mem.addData(StreamOps.KeyedItem("real", null))
-    q.processAllAvailable()
-    q.stop()
-    val rows = spark.table("hll_nulls").collect()
-    assert(!rows.exists(_.getString(0) == "junk"),
-      "null-only group must not emit an estimate row")
-    assert(rows.count(_.getString(0) == "real") == 1,
-      "a null-only batch against existing state must not re-emit")
+  /** One null-only case per arrival-time sketch op: a group whose batch
+    * holds only null values emits nothing and holds no state row (the
+    * store's numRowsTotal), and a null-only batch for a group that holds
+    * state emits nothing new. */
+  private def nullOnlyCase[T: Encoder](name: String, real: T,
+      nullFor: String => T)(op: Dataset[T] => Dataset[_]): Unit =
+    test(s"streaming $name: a null-only batch allocates no state and emits no row") {
+      val mem = MemoryStream[T](spark, 1)
+      val table = "nulls_" + name.filter(_.isLetter)
+      val q = op(mem.toDS()).writeStream.format("memory").queryName(table)
+        .outputMode("append").start()
+      def rowsOf(g: String) = spark.table(table).where(col("group") === g).count()
+      mem.addData(nullFor("junk"), nullFor("junk"), real)
+      q.processAllAvailable()
+      val stateRows = q.lastProgress.stateOperators(0).numRowsTotal
+      val realRows = rowsOf("real")
+      // second batch: only a null for the group that already holds state
+      mem.addData(nullFor("real"))
+      q.processAllAvailable()
+      q.stop()
+      assert(rowsOf("junk") == 0, "null-only group must not emit")
+      assert(stateRows == 1L, s"null-only group must not allocate state: $stateRows rows")
+      assert(realRows == 1L && rowsOf("real") == 1L,
+        "a null-only batch against existing state must not re-emit")
+    }
+
+  nullOnlyCase("HLL", StreamOps.KeyedItem("real", "k1"),
+      StreamOps.KeyedItem(_, null)) { ds =>
+    StreamOps.hllDistinctStream(spark, ds, p = 9, idleTimeout = None)
+  }
+  nullOnlyCase("Bloom dedup", StreamOps.KeyedItem("real", "k1"),
+      StreamOps.KeyedItem(_, null)) { ds =>
+    StreamOps.bloomDedupStream(spark, ds, idleTimeout = None)
+  }
+  nullOnlyCase("count-min", StreamOps.KeyedItem("real", "k1"),
+      StreamOps.KeyedItem(_, null)) { ds =>
+    StreamOps.countMinStream(spark, ds, idleTimeout = None)
+  }
+  nullOnlyCase("z-score", StreamOps.KeyedValue("real", 10L),
+      StreamOps.KeyedValue(_, null)) { ds =>
+    StreamOps.zscoreStream(spark, ds, idleTimeout = None)
+  }
+  nullOnlyCase("EWMA", StreamOps.KeyedValue("real", 10L),
+      StreamOps.KeyedValue(_, null)) { ds =>
+    StreamOps.ewmaStream(spark, ds, idleTimeout = None)
+  }
+  nullOnlyCase("top-k", StreamOps.KeyedScore("real", "a", 1L),
+      StreamOps.KeyedScore(_, "a", null)) { ds =>
+    StreamOps.topKStream(spark, ds, k = 3, idleTimeout = None)
   }
 
   test("streaming count-min: one-sided, null-guarded, bit-identical to the batch sketch over the same prefix") {
@@ -1045,5 +1073,143 @@ class StreamOpsSpec extends SparkSpec {
       Optional.of(day1EndMs - 7200000L), false)
     StreamOps.armDaySeal(open, day1EndMs)
     assert(open.getTimeoutTimestampMs.get() == day1EndMs)
+  }
+
+  test("funnel stream: a user with no first-step event holds no state row, even with an idle timeout") {
+    // a processing-time timeout schedules a no-data batch on every
+    // trigger, which keeps processAllAvailable from returning: run data
+    // batches only
+    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
+    try {
+      val mem = MemoryStream[StreamOps.TypedEvent](spark, 1)
+      val q = StreamOps.funnelStream(spark, mem.toDS(), Seq("view", "click"),
+          horizonHours = 72, idleTimeout = Some("1 hour"))
+        .writeStream.format("memory").queryName("funnel_nostart")
+        .outputMode("append").start()
+      // users 1 and 3 never view: no funnel entry, so no state
+      mem.addData(StreamOps.TypedEvent(1L, 1L, "click", 0L),
+        StreamOps.TypedEvent(2L, 2L, "view", 0L),
+        StreamOps.TypedEvent(3L, 3L, "click", 5L))
+      q.processAllAvailable()
+      val stateRows = q.lastProgress.stateOperators(0).numRowsTotal
+      q.stop()
+      assert(stateRows == 1L, s"$stateRows state rows, expected user 2's only")
+      assert(spark.table("funnel_nostart").collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSeq == Seq((2L, 0L)))
+    } finally spark.conf.unset("spark.sql.streaming.noDataMicroBatches.enabled")
+  }
+
+  // The two lifecycle drivers, one invocation at a time through Spark's
+  // TestGroupState (no clock, no running query). `counting` stands in for
+  // an operator's fold: it sums the batch into the state and returns None
+  // for an empty batch — the shape a null-only batch takes in every op.
+
+  import org.apache.spark.api.java.Optional
+  import org.apache.spark.sql.streaming.{GroupStateTimeout => GST, TestGroupState}
+
+  private def counting[K]: StreamOps.Fold[K, Long, Long, String] =
+    (key, rows, prior) => {
+      val batch = rows.toList
+      if (batch.isEmpty) None
+      else {
+        val total = prior.getOrElse(0L) + batch.sum
+        Some((total, Iterator(s"$key=$total")))
+      }
+    }
+
+  private val nowMs = 1700000000000L
+  private val hourMs = 3600000L
+  private def opt(v: Option[Long]): Optional[Long] =
+    v.fold(Optional.empty[Long]())(Optional.of(_))
+  private def idleState(prior: Option[Long], timedOut: Boolean = false,
+      conf: GST = GST.ProcessingTimeTimeout) =
+    TestGroupState.create[Long](opt(prior), conf, nowMs, Optional.empty[Long](),
+      timedOut)
+  private def idleStep(idle: Option[String]) =
+    StreamOps.idleFoldStep(idle, counting[String])
+
+  test("idleFold: a timed-out group is removed and emits nothing") {
+    val st = idleState(Some(5L), timedOut = true)
+    assert(idleStep(Some("1 hour"))("g", Iterator.empty, st).isEmpty)
+    assert(st.isRemoved && !st.exists)
+  }
+
+  test("idleFold: an observed batch updates the state and arms now + idleTimeout") {
+    val st = idleState(Some(5L))
+    assert(idleStep(Some("1 hour"))("g", Iterator(2L, 3L), st).toList == List("g=10"))
+    assert(st.isUpdated && st.get == 10L)
+    assert(st.getTimeoutTimestampMs == Optional.of(nowMs + hourMs))
+  }
+
+  test("idleFold: a null-only batch on existing state re-arms the timer") {
+    // Spark clears the timeout on every invocation: without the re-arm
+    // the timer is cancelled and the state never expires
+    val st = idleState(Some(5L))
+    assert(idleStep(Some("1 hour"))("g", Iterator.empty, st).isEmpty)
+    assert(!st.isUpdated && !st.isRemoved && st.get == 5L)
+    assert(st.getTimeoutTimestampMs == Optional.of(nowMs + hourMs))
+  }
+
+  test("idleFold: a null-only batch on a new group leaves no state and no timer") {
+    val st = idleState(None)
+    assert(idleStep(Some("1 hour"))("g", Iterator.empty, st).isEmpty)
+    assert(!st.exists && !st.isUpdated)
+    assert(!st.getTimeoutTimestampMs.isPresent)
+  }
+
+  test("idleFold: no idleTimeout sets no timer") {
+    // under NoTimeout Spark rejects setTimeoutDuration, so a stray call throws
+    val fresh = idleState(None, conf = GST.NoTimeout)
+    assert(idleStep(None)("g", Iterator(4L), fresh).toList == List("g=4"))
+    assert(fresh.get == 4L && !fresh.getTimeoutTimestampMs.isPresent)
+    val held = idleState(Some(5L), conf = GST.NoTimeout)
+    assert(idleStep(None)("g", Iterator.empty, held).isEmpty)
+    assert(held.get == 5L && !held.getTimeoutTimestampMs.isPresent)
+  }
+
+  private val dayIdx = 19723L // 2024-01-01
+  private val dayEndMs = (dayIdx + 1) * 86400000L
+  private def dayState(prior: Option[Long], wmMs: Long) =
+    TestGroupState.create[Long](opt(prior), GST.EventTimeTimeout, nowMs,
+      Optional.of(wmMs), false)
+  private val dayStep = StreamOps.dayFoldStep(counting[(String, String)])
+
+  test("dayFold: a sealed day drops its rows") {
+    val st = dayState(None, wmMs = dayEndMs)
+    assert(dayStep(("g", dayIdx), Iterator(1L), st).isEmpty)
+    assert(!st.exists && !st.isUpdated && !st.getTimeoutTimestampMs.isPresent)
+  }
+
+  test("dayFold: a null-only batch on an open day re-arms the seal") {
+    val st = dayState(Some(5L), wmMs = dayEndMs - 2 * hourMs)
+    assert(dayStep(("g", dayIdx), Iterator.empty, st).isEmpty)
+    assert(!st.isUpdated && st.get == 5L)
+    assert(st.getTimeoutTimestampMs == Optional.of(dayEndMs))
+  }
+
+  test("dayFold: an update arms the clamped seal and keys the fold on the ISO day") {
+    // the watermark already jumped past the day's end (a late row
+    // admitted against the previous batch's watermark)
+    val wm = dayEndMs + 3 * 86400000L - hourMs
+    val st = dayState(Some(5L), wmMs = wm)
+    assert(dayStep(("g", dayIdx), Iterator(1L), st).toList ==
+      List("(g,2024-01-01)=6"))
+    assert(st.isUpdated && st.get == 6L)
+    assert(st.getTimeoutTimestampMs == Optional.of(wm + 1L))
+  }
+
+  test("lifecycle calls live only in the drivers: timeouts in idleFold, day seals in dayFold") {
+    val f = new java.io.File("src/main/scala/graft/streaming/StreamOps.scala")
+    assert(f.isFile, s"StreamOps.scala not found from ${new java.io.File(".").getAbsolutePath}")
+    // comments may name the calls; only code counts
+    val code = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+      .replaceAll("(?s)/\\*.*?\\*/", "").replaceAll("//[^\n]*", "")
+    val defs = "def (\\w+)".r.findAllMatchIn(code).map(m => m.start -> m.group(1)).toSeq
+    // the def each occurrence sits in = the nearest def before it
+    def owners(token: String): Set[String] =
+      token.r.findAllMatchIn(code).map(m => defs.takeWhile(_._1 < m.start).last._2).toSet
+    assert(owners("setTimeoutDuration") == Set("idleFoldStep"))
+    assert(owners("GroupStateTimeout\\.ProcessingTimeTimeout") == Set("idleFold"))
+    assert(owners("(?<!def )armDaySeal\\(") == Set("dayFoldStep"))
   }
 }
