@@ -1,6 +1,6 @@
 package graft.etl
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** O1/O2 — the reference's linear pipeline driver (main.py:326-334):
@@ -12,12 +12,18 @@ import org.apache.spark.sql.functions._
   * Each stage is lazy DataFrame composition with exactly one action at
   * its sink, so Catalyst sees the whole stage plan (pushdown, pruning,
   * WSCG); the only shuffle in the entire flow is gold's groupBy.
+  *
+  * Every layer write is write-audit-publish (see [[Sinks]]): each
+  * full-run layer is replaced by a whole-table swap, each recomputed
+  * partition by a per-leaf swap. The published path is absent between
+  * `swapInto`'s two renames, and a multi-partition recompute is not
+  * atomic across partitions.
   */
 object Pipeline {
 
   /** `metrics` carries what the stage observed while running — e.g.
     * `rows_written`, measured inside the write job via the Observation
-    * API (Sinks.writePartitionedCounted), never by a second action: the
+    * API (in Sinks' staging write), never by a second action: the
     * reference prints its per-stage row counts from the in-memory frame
     * (main.py:242-247, 287, 309); a distributed engine that re-counted
     * would re-execute the stage. */
@@ -45,10 +51,8 @@ object Pipeline {
     *   silver  (main.py:189-267): coerce valor (null→0), normalize 6
     *           nome_* cols, nullable ano/mes, QUALITY GATE (abort before
     *           any data becomes visible), then date parse, write — the
-    *           gate runs as write-audit-publish (metrics observed during
-    *           ONE staging-write pass, publish by atomic move;
-    *           Sinks.publishAudited) instead of a separate gate scan +
-    *           write pass;
+    *           gate is the audit of the staging write (metrics observed
+    *           during that ONE pass) instead of a separate gate scan;
     *   gold    (main.py:270-323): require {ano,mes,nome_orgao,valor},
     *           group-sum to total_gasto, write.
     */
@@ -60,71 +64,81 @@ object Pipeline {
       // main.py:142-146) is satisfied at parse time — malformed values
       // become null under PERMISSIVE and the silver gate catches them.
       // strictCastOrKeep stays available for string-typed inputs.
-      Map("rows_written" -> Sinks.writePartitionedCounted(
-        Sources.readRawPages(spark, rawGlob), bronzePath))
+      Map("rows_written" -> Sinks.publishAudited(
+        Sources.readRawPages(spark, rawGlob), bronzePath, () => ()))
     }),
-    Stage("bronze_to_silver", { spark =>
-      val bronze = Sources.readParquetLayer(spark, bronzePath)
-      val cleaned = Cleaning.silverClean(bronze)
+    silverStage("bronze_to_silver", bronzePath, silverPath, None),
+    goldStage("silver_to_gold", silverPath, goldPath, None))
+
+  /** Partition-scoped incremental recompute (SURVEY §4.1): rebuild
+    * silver+gold ONLY for the given (ano, mes) partitions, with the full
+    * run's stage bodies. Taking explicit partition values — not an
+    * arbitrary Column — is a safety contract: the per-leaf swap replaces
+    * whole partitions, so a row-level filter here would silently drop
+    * every non-matching row of the touched partitions. The partition
+    * filter prunes each scan to the matching hive directories; untouched
+    * partitions are never read or rewritten. Daily at 100 TB this is the
+    * difference between reprocessing one day and reprocessing the lake. */
+  def incrementalSilverGold(bronzePath: String, silverPath: String,
+      goldPath: String, partitions: Seq[(Int, Int)]): Seq[Stage] = {
+    require(partitions.nonEmpty, "no partitions to recompute")
+    Seq(silverStage("bronze_to_silver_incremental", bronzePath, silverPath, Some(partitions)),
+      goldStage("silver_to_gold_incremental", silverPath, goldPath, Some(partitions)))
+  }
+
+  private def silverStage(name: String, bronzePath: String, silverPath: String,
+      partitions: Option[Seq[(Int, Int)]]): Stage =
+    Stage(name, { spark =>
+      val cleaned = Cleaning.silverClean(readLayer(spark, bronzePath, partitions))
       Quality.requireColumns(cleaned, Seq("ano", "mes", "nome_orgao", "nome_favorecido"))
       // the gate columns (ano/mes/nome_*/valor) are untouched by the
       // date parse, so auditing the dated frame == gating the cleaned one
       val dated = Cleaning.parseDate(cleaned, "data_pagamento")
       val (observed, gate) = Quality.observedChecks(dated, Quality.silverChecks)
-      Map("rows_written" -> Sinks.publishAudited(observed, silverPath,
+      Map("rows_written" -> publish(observed, silverPath, partitions, "bronze",
         () => Quality.assertObserved(gate, Quality.silverChecks)))
-    }),
-    Stage("silver_to_gold", { spark =>
-      val silver = Sources.readParquetLayer(spark, silverPath)
+    })
+
+  private def goldStage(name: String, silverPath: String, goldPath: String,
+      partitions: Option[Seq[(Int, Int)]]): Stage =
+    Stage(name, { spark =>
+      val silver = readLayer(spark, silverPath, partitions)
       Quality.requireColumns(silver, Seq("ano", "mes", "nome_orgao", "valor"))
       val gold = Aggregates.goldAggregate(silver)
         .select(col("ano"), col("mes"), col("nome_orgao"), col("total_gasto"))
-      Map("rows_written" -> Sinks.writePartitionedCounted(gold, goldPath))
-    }))
+      Map("rows_written" -> publish(gold, goldPath, partitions, "silver", () => ()))
+    })
 
-  /** Partition-scoped incremental recompute (SURVEY §4.1): rebuild
-    * silver+gold ONLY for the given (ano, mes) partitions. Taking
-    * explicit partition values — not an arbitrary Column — is a safety
-    * contract: dynamic partition overwrite replaces whole partitions, so
-    * a row-level filter here would silently drop every non-matching row
-    * of the touched partitions. The partition filter prunes the bronze
-    * scan to the matching hive directories; untouched partitions are
-    * never read or rewritten. Daily at 100 TB this is the difference
-    * between reprocessing one day and reprocessing the lake. */
-  def incrementalSilverGold(bronzePath: String, silverPath: String,
-      goldPath: String, partitions: Seq[(Int, Int)]): Seq[Stage] = {
-    require(partitions.nonEmpty, "no partitions to recompute")
-    val partitionFilter = partitions
+  private def readLayer(spark: SparkSession, path: String,
+      partitions: Option[Seq[(Int, Int)]]): DataFrame = {
+    val layer = Sources.readParquetLayer(spark, path)
+    partitions.fold(layer)(ps => layer.where(ps
       .map { case (ano, mes) => col("ano") === ano && col("mes") === mes }
-      .reduce(_ || _)
-    Seq(
-      Stage("bronze_to_silver_incremental", { spark =>
-        val bronze = Sources.readParquetLayer(spark, bronzePath).where(partitionFilter)
-        // dynamic overwrite can only REPLACE partitions present in the
-        // written frame — a requested partition that became empty in
-        // bronze would silently keep its stale silver/gold rows. Fail
-        // loudly instead; deleting dead partitions is an explicit op.
-        val present = bronze.select(col("ano"), col("mes")).distinct().collect()
-          .map(r => (r.getAs[Number]("ano").intValue, r.getAs[Number]("mes").intValue)).toSet
-        val empty = partitions.filterNot(present.contains)
-        if (empty.nonEmpty) throw new IllegalStateException(
-          s"partitions ${empty.mkString(", ")} have no bronze rows; dynamic " +
-            "overwrite cannot clear them — delete the dead partitions explicitly")
-        val cleaned = Cleaning.silverClean(bronze)
-        Quality.requireColumns(cleaned, Seq("ano", "mes", "nome_orgao", "nome_favorecido"))
-        // one-pass gate, partition-scoped publish: metrics observed
-        // during the staging write, only the recomputed partitions move
-        val dated = Cleaning.parseDate(cleaned, "data_pagamento")
-        val (observed, gate) = Quality.observedChecks(dated, Quality.silverChecks)
-        Map("rows_written" -> Sinks.publishAuditedPartitions(observed, silverPath,
-          () => Quality.assertObserved(gate, Quality.silverChecks)))
-      }),
-      Stage("silver_to_gold_incremental", { spark =>
-        val silver = Sources.readParquetLayer(spark, silverPath).where(partitionFilter)
-        Quality.requireColumns(silver, Seq("ano", "mes", "nome_orgao", "valor"))
-        val gold = Aggregates.goldAggregate(silver)
-          .select(col("ano"), col("mes"), col("nome_orgao"), col("total_gasto"))
-        Map("rows_written" -> Sinks.overwritePartitionsOfCounted(gold, goldPath))
-      }))
+      .reduce(_ || _)))
   }
+
+  /** A full run publishes by whole-table swap, a recompute by per-leaf
+    * swap. A requested partition that became empty upstream has no leaf
+    * to swap and would keep its stale rows, so a recompute observes the
+    * (ano, mes) values of its staging write and fails in the audit,
+    * before anything is published. */
+  private def publish(df: DataFrame, path: String,
+      partitions: Option[Seq[(Int, Int)]], source: String, audit: () => Unit): Long =
+    partitions match {
+      case None => Sinks.publishAudited(df, path, audit)
+      case Some(requested) =>
+        val written = Observation()
+        Sinks.publishAuditedPartitions(
+          df.observe(written, collect_set(struct(col("ano"), col("mes"))).as("partitions")),
+          path, { () =>
+            // partition discovery types ano/mes Int, silverClean Long
+            val present = written.get("partitions").asInstanceOf[scala.collection.Seq[Row]]
+              .map(r => (r.getAs[Number](0).intValue, r.getAs[Number](1).intValue)).toSet
+            val empty = requested.filterNot(present.contains)
+            if (empty.nonEmpty) throw new IllegalStateException(
+              s"partitions ${empty.mkString(", ")} have no $source rows; a recompute " +
+                "cannot clear them — delete the dead partitions explicitly")
+            audit()
+          })
+    }
 }

@@ -4,14 +4,30 @@ import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.functions.{count, lit}
 
-/** S7: hive-partitioned snappy parquet sink (SURVEY.md §2.1).
+/** S7: hive-partitioned snappy parquet sink (SURVEY.md §2.1), and the
+  * medallion's one publish protocol, write-audit-publish: a layer is
+  * written to `<path>.staging`, audited from metrics observed during that
+  * same write job, and published by rename.
   *
-  * The reference's pandas to_parquet writes a fresh GUID file per run and
-  * never overwrites — de-facto append (SURVEY §1.4.4). We make the mode a
-  * first-class argument; `overwrite` is the sane default for recomputed
-  * layers, `append` reproduces the reference.
+  *   - [[publishAudited]] replaces a whole table by one swap (each layer
+  *     of a full run);
+  *   - [[publishAuditedPartitions]] replaces each written `ano=/mes=`
+  *     leaf by its own swap (each partition of a recompute, and a landing
+  *     page's partitions in bronze).
+  *
+  * Guarantee, per swap: a reader sees the old table (or leaf) or the new
+  * one, never a mix of the two — except that the published path is
+  * absent between `swapInto`'s two renames. A multi-partition recompute
+  * is not atomic across partitions: a reader during the leaf loop, or a
+  * crash in it, sees some leaves new and others old. The plain hive
+  * layout stays because the benchmark and the reference read the plain
+  * `ano=/mes=` tree; a commit atomic across partitions is
+  * [[ManifestTable]]'s job.
   */
 object Sinks {
+  /** The bare write. `append` reproduces the reference's pandas
+    * to_parquet, which writes a fresh GUID file per run and never
+    * overwrites (SURVEY §1.4.4); the medallion itself never appends. */
   def writePartitioned(
       df: DataFrame,
       path: String,
@@ -24,50 +40,18 @@ object Sinks {
       .parquet(path)
   }
 
-  /** [[writePartitioned]] that also returns the row count of the written
-    * frame, measured DURING the write job via the Observation API — the
-    * Spark-native form of the reference's informational per-stage row
-    * prints (main.py:242-247, 287, 309), at zero extra passes: a
-    * `df.count()` before or after the write would re-execute the whole
-    * stage plan, which at 100 TB doubles the stage. */
-  def writePartitionedCounted(
-      df: DataFrame,
-      path: String,
-      mode: String = "overwrite",
-      partitionBy: Seq[String] = GastosSchema.partitionColumns): Long = {
-    val obs = Observation()
-    writePartitioned(df.observe(obs, count(lit(1)).as("rows")),
-      path, mode, partitionBy)
-    obs.get("rows").asInstanceOf[Long]
-  }
-
-  /** Dynamic partition overwrite: replace ONLY the partitions present in
-    * df, leave all others untouched — the write mode for incremental
-    * recompute (a daily run that rebuilds one ano/mes does not clobber
-    * seven years of history, and does not re-write 100 TB). */
-  def overwritePartitionsOf(
-      df: DataFrame,
-      path: String,
-      partitionBy: Seq[String] = GastosSchema.partitionColumns): Unit = {
-    df.write
-      .mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .option("compression", "snappy")
-      .partitionBy(partitionBy: _*)
-      .parquet(path)
-  }
-
   private def delete(fs: FileSystem, p: HPath): Unit = { fs.delete(p, true); () }
 
   /** Replace `target` with `replacement` without a window where neither
     * copy exists durably: target is first swapped aside to `old` (a
     * location OUTSIDE any table root, so hive discovery never sees it),
-    * the replacement moved in, and the old copy deleted last. If the
-    * move-in fails, the old copy is restored and the replacement left
-    * untouched for the caller's recovery policy. Routed through the
-    * Hadoop FileSystem resolved from the path, so the swap runs against
-    * whatever filesystem the staging write went to (local, hdfs://, …)
-    * rather than silently assuming the driver's local disk. */
+    * the replacement moved in, and the old copy deleted last. `target`
+    * itself is absent between the two renames. If the move-in fails, the
+    * old copy is restored and the replacement left untouched for the
+    * caller's recovery policy. Routed through the Hadoop FileSystem
+    * resolved from the path, so the swap runs against whatever
+    * filesystem the staging write went to (local, hdfs://, …) rather
+    * than silently assuming the driver's local disk. */
   private def swapInto(fs: FileSystem, replacement: HPath, target: HPath,
       old: HPath): Unit = {
     delete(fs, old)
@@ -91,11 +75,15 @@ object Sinks {
     delete(fs, old)
   }
 
-  /** Shared write-audit-publish scaffold. Failure BEFORE or DURING the
-    * audit deletes staging (nothing publishable existed); a failure
-    * inside `publish` leaves the staged, audit-passed data in place —
-    * after a clean audit the staged copy is the valuable one, and the
-    * rerun's own staging overwrite supersedes it. */
+  /** Shared write-audit-publish scaffold; returns the row count of the
+    * written frame, observed DURING the staging write — the Spark-native
+    * form of the reference's per-stage row prints (main.py:242-247, 287,
+    * 309) at zero extra passes: a `df.count()` would re-execute the whole
+    * stage plan. Failure BEFORE or DURING the audit deletes staging
+    * (nothing publishable existed); a failure inside `publish` leaves the
+    * staged, audit-passed data in place — after a clean audit the staged
+    * copy is the valuable one, and the rerun's own staging overwrite
+    * supersedes it. */
   private def stagedPublish(df: DataFrame, path: String, audit: () => Unit,
       partitionBy: Seq[String])(
       publish: (FileSystem, HPath) => Unit): Long = {
@@ -103,37 +91,28 @@ object Sinks {
       .getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
     val staging = fs.makeQualified(new HPath(path + ".staging"))
     delete(fs, staging)
+    val written = Observation()
     val rows =
       try {
-        val r = writePartitionedCounted(df, staging.toString, "overwrite", partitionBy)
+        writePartitioned(df.observe(written, count(lit(1)).as("rows")),
+          staging.toString, "overwrite", partitionBy)
         audit()
-        r
+        written.get("rows").asInstanceOf[Long]
       } catch { case e: Throwable => delete(fs, staging); throw e }
     publish(fs, staging)
     rows
   }
 
-  /** Write-audit-publish: the ONE-PASS form of the quality-gated
-    * overwrite sink. The frame is written to `<path>.staging` with the
-    * gate's violation counts observed during that same write job
-    * (Quality.observedChecks); `audit()` then reads the observed metrics
-    * and throws on violation — staging is deleted and nothing becomes
-    * visible at `path`; on a clean audit the staging dir is swapped into
-    * place (previous data set aside at `<path>.old`, restored if the
-    * swap fails, deleted last — at no point is the published path's data
-    * deleted before its replacement is in place). Same externally-
-    * visible contract as the two-pass gate (bad data never lands at
-    * `path`), but the corpus is scanned once, not twice — at 100 TB that
-    * halves the stage. The publish renames go through the Hadoop
-    * FileSystem resolved from `path`, so any Hadoop-visible filesystem
-    * works; the no-partial-visibility guarantee additionally needs
-    * ATOMIC dir rename, which local and HDFS provide — on an object
-    * store (s3a:// rename = copy) use a table format's metadata commit
-    * instead (Iceberg/Delta do exactly this pattern). Overwrite-mode
-    * only: an append publish would need a merge, which is a table-format
-    * commit, not a dir move. Hard-crash recovery = rerun the stage:
-    * leftover `.staging`/`.old` dirs are superseded and cleaned by the
-    * rerun. */
+  /** Write-audit-publish with a whole-table swap: `audit()` reads the
+    * metrics observed during the staging write (e.g.
+    * Quality.observedChecks) and throws on violation — staging is deleted
+    * and nothing becomes visible at `path`; on a clean audit staging is
+    * swapped into place (previous data set aside at `<path>.old`,
+    * restored if the swap fails, deleted last). A layer with nothing to
+    * audit passes `() => ()`. The swap needs ATOMIC dir rename, which
+    * local and HDFS provide — on an object store (s3a:// rename = copy)
+    * use a table format's metadata commit instead. Hard-crash recovery =
+    * rerun the stage: leftover `.staging`/`.old` dirs are superseded. */
   def publishAudited(
       df: DataFrame,
       path: String,
@@ -144,21 +123,15 @@ object Sinks {
         fs.makeQualified(new HPath(path + ".old")))
     }
 
-  /** Write-audit-publish for PARTITION-SCOPED overwrites (the
-    * incremental-recompute twin of [[publishAudited]]): the frame is
-    * staged as a plain overwrite (the staging dir is fresh, so the
-    * partitions present there are exactly the partitions dynamic
-    * overwrite would replace), audited via the metrics observed during
-    * that write, and published by swapping each staged leaf partition
-    * dir over its target — untouched partitions are never read,
-    * rewritten, or moved, and each leaf's previous data is set aside
-    * under `<path>.old` (outside the table root, invisible to hive
-    * discovery) and restored if that leaf's swap fails. Renames go
-    * through the Hadoop FileSystem resolved from `path` (local/hdfs://
-    * rename atomically; object stores need a table format, see
-    * [[publishAudited]]). A cross-partition atomic commit needs a table
-    * format regardless. A failure mid-loop keeps already-published
-    * leaves and the remaining staged leaves (rerun supersedes both). */
+  /** Write-audit-publish with a per-leaf swap: replace ONLY the
+    * partitions present in the frame. Staging is fresh, so its leaves are
+    * exactly the partitions the write produced; after the audit each
+    * staged leaf is swapped over its target (previous data set aside
+    * under `<path>.old`, restored if that leaf's swap fails). Untouched
+    * partitions are never read, rewritten or moved. A failure mid-loop
+    * keeps already-published leaves and the remaining staged ones (a
+    * rerun supersedes both). A requested partition with no rows has no
+    * staged leaf and keeps its old data: the caller's audit checks that. */
   def publishAuditedPartitions(
       df: DataFrame,
       path: String,
@@ -189,15 +162,11 @@ object Sinks {
       }
     }
 
-  /** [[overwritePartitionsOf]] with the observed row count — see
-    * [[writePartitionedCounted]] for the zero-extra-pass contract. */
+  /** [[publishAuditedPartitions]] with nothing to audit: how a landing
+    * page's partitions replace theirs in bronze. */
   def overwritePartitionsOfCounted(
       df: DataFrame,
       path: String,
-      partitionBy: Seq[String] = GastosSchema.partitionColumns): Long = {
-    val obs = Observation()
-    overwritePartitionsOf(df.observe(obs, count(lit(1)).as("rows")),
-      path, partitionBy)
-    obs.get("rows").asInstanceOf[Long]
-  }
+      partitionBy: Seq[String] = GastosSchema.partitionColumns): Long =
+    publishAuditedPartitions(df, path, () => (), partitionBy)
 }

@@ -175,6 +175,85 @@ class PipelineSpec extends SparkSpec {
     assert(silverAfter == silverBefore)
   }
 
+  /** A lake built by one full run over three partitions: 2011/1, 2011/2
+    * and 2012/1. Returns its root. */
+  private def threePartitionLake(prefix: String): String = {
+    val root = tmpDir(prefix)
+    val rawDir = Paths.get(root, "raw"); Files.createDirectories(rawDir)
+    val page = s"""{"count": 3, "next": null, "previous": null, "results": [
+      ${record(2011, 1, "orgao a", "fav", "10.00")},
+      ${record(2011, 2, "orgao a", "fav", "20.00")},
+      ${record(2012, 1, "orgao b", "fav", "30.00")}]}"""
+    Files.write(rawDir.resolve("gastos-diretos_gastos_page_1.json"),
+      page.getBytes(StandardCharsets.UTF_8))
+    val full = Pipeline.run(spark, Pipeline.medallion(
+      s"$root/raw/*.json", s"$root/bronze", s"$root/silver", s"$root/gold"))
+    assert(full.forall(_.ok), full.mkString("; "))
+    root
+  }
+
+  /** Every parquet file under `dir` with its mtime. */
+  private def layerFiles(dir: String): Map[String, Long] = {
+    import scala.jdk.CollectionConverters._
+    Files.walk(Paths.get(dir)).iterator.asScala
+      .filter(_.toString.endsWith(".parquet"))
+      .map(p => p.toString -> Files.getLastModifiedTime(p).toMillis).toMap
+  }
+
+  test("incremental recompute of a partition with no bronze rows publishes nothing") {
+    val root = threePartitionLake("pipeline-incr-empty")
+    val layers = Seq("silver", "gold").map(l => s"$root/$l")
+    val before = layers.map(layerFiles)
+    Thread.sleep(20)
+    // (2011, 1) has bronze rows, (2013, 5) has none
+    val incr = Pipeline.run(spark, Pipeline.incrementalSilverGold(
+      s"$root/bronze", s"$root/silver", s"$root/gold", Seq((2011, 1), (2013, 5))))
+    val silverRes = incr.find(_.name == "bronze_to_silver_incremental").get
+    assert(!silverRes.ok && silverRes.error.get.contains("partitions (2013,5) have no bronze rows"),
+      silverRes)
+    // fail-soft runs gold next: (2013, 5) has no silver rows either
+    val goldRes = incr.find(_.name == "silver_to_gold_incremental").get
+    assert(!goldRes.ok && goldRes.error.get.contains("partitions (2013,5) have no silver rows"),
+      goldRes)
+    // not even the present partition (2011, 1) was published
+    assert(layers.map(layerFiles) == before)
+    for (l <- layers; residue <- Seq(".staging", ".old"))
+      assert(!Files.exists(Paths.get(l + residue)), l + residue)
+  }
+
+  test("job counts per stage: full run and one-partition recompute") {
+    val root = threePartitionLake("pipeline-jobs")
+    def jobsPerStage(stages: Seq[Pipeline.Stage]): Seq[(String, Int)] =
+      stages.map(st => st.name -> jobsDuring(st.run(spark))._2)
+    val full = jobsPerStage(Pipeline.medallion(
+      s"$root/raw/*.json", s"$root/bronze", s"$root/silver", s"$root/gold"))
+    val incr = jobsPerStage(Pipeline.incrementalSilverGold(
+      s"$root/bronze", s"$root/silver", s"$root/gold", Seq((2011, 1))))
+    // bronze: the write; silver: schema inference + the write; gold:
+    // schema inference + groupBy's shuffle + the write. The recompute
+    // checks its partitions on the write itself, at no extra job.
+    assert((full, incr) == ((
+      Seq("raw_to_bronze" -> 1, "bronze_to_silver" -> 2, "silver_to_gold" -> 3),
+      Seq("bronze_to_silver_incremental" -> 2, "silver_to_gold_incremental" -> 3))))
+  }
+
+  test("Pipeline publishes only through write-audit-publish; no dynamic overwrite remains") {
+    def code(f: java.io.File): String =
+      new String(Files.readAllBytes(f.toPath), "UTF-8")
+        .replaceAll("(?s)/\\*.*?\\*/", "").replaceAll("//[^\n]*", "")
+    def scalaFiles(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) Option(f.listFiles).toSeq.flatten.flatMap(scalaFiles)
+      else if (f.getName.endsWith(".scala")) Seq(f)
+      else Nil
+    val mainSrc = new java.io.File("src/main/scala")
+    assert(mainSrc.isDirectory, s"src/main/scala not found from ${new java.io.File(".").getAbsolutePath}")
+    assert(!scalaFiles(mainSrc).exists(f => code(f).contains("partitionOverwriteMode")))
+    val pipeline = code(new java.io.File(mainSrc, "graft/etl/Pipeline.scala"))
+    assert("Sinks\\.(\\w+)".r.findAllMatchIn(pipeline).map(_.group(1)).toSet ==
+      Set("publishAudited", "publishAuditedPartitions"))
+    assert(!pipeline.contains(".collect("))
+  }
+
   test("failFast rethrows instead of recording") {
     val boom = Pipeline.Stage("boom", _ => throw new RuntimeException("x"))
     intercept[RuntimeException] { Pipeline.run(spark, Seq(boom), failFast = true) }
