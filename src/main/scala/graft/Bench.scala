@@ -15,9 +15,18 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Harness.session(confs(Harness.cpus(4)))
+    // Classes Spark compiled, one per miss of its codegen cache: the
+    // warm-up's and each timed sweep's deltas go to bench_result.json.
+    // Warm-up plus the first sweep is the working set that
+    // GraftSession.codegenCache is sized from; a second sweep near 0
+    // shows the cache holds it.
+    def compiles: Long =
+      org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val c0 = compiles
     // JIT/codegen warmup on the smallest SF so per-query numbers measure
     // the plan, not first-call classloading.
     try SparkEntry.entry(spark).count() catch { case _: Throwable => () }
+    val c1 = compiles
     // Two timed runs, report the min: steady-state per-query time with
     // first-run codegen/classload noise removed.
     // A failed query must NOT report its (tiny) failure wall time as a
@@ -32,6 +41,7 @@ object Bench {
       if (a < 0 || b < 0) -1.0 else math.min(a, b)
     val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
     val run1 = ordered.map { case (n, fn) => n -> timeOnce(fn) }.toMap
+    val c2 = compiles
     // Cache hygiene between the two timed sweeps: a query that leaked a
     // plan-keyed cache entry in run 1 would otherwise serve run 1's data
     // to run 2's identical analyzed plan, and the reported min would be
@@ -40,6 +50,8 @@ object Bench {
     // defensive backstop so a future leak can't flatter the bench.
     spark.catalog.clearCache()
     val results = ordered.map { case (n, fn) => n -> merge(run1(n), timeOnce(fn)) }
+    val codegenJson =
+      s"""{"warmup":${c1 - c0},"sweep1":${c2 - c1},"sweep2":${compiles - c2}}"""
     val failed = results.filter(_._2 < 0).map(_._1)
     if (failed.nonEmpty)
       System.err.println(s"[bench] FAILED queries (reported as -1): ${failed.mkString(", ")}")
@@ -89,7 +101,7 @@ object Bench {
       .mkString("{", ",", "}")
     val driftFlagged = if (baselineDead) -1 else drift.size
     val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":${jsonMap(headlineQs)},"n_queries":${results.size},"drift_flagged":$driftFlagged,"sf":"$sfDir"}"""
-    val fullLine = s"""{"metric":"total","value":$total,"unit":"sec","queries":${jsonMap(results)},"drift":$driftJson,"sf":"$sfDir"}"""
+    val fullLine = s"""{"metric":"total","value":$total,"unit":"sec","queries":${jsonMap(results)},"drift":$driftJson,"codegen_compiles":$codegenJson,"sf":"$sfDir"}"""
     try java.nio.file.Files.write(java.nio.file.Paths.get("bench_result.json"),
       (fullLine + "\n").getBytes("UTF-8"))
     catch { case e: Exception => System.err.println(s"[bench] bench_result.json not written: $e") }

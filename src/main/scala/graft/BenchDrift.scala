@@ -16,7 +16,8 @@ package graft
 object BenchDrift {
 
   /** Keys in the bench JSON that are not per-query seconds. */
-  private val meta = Set("value", "n_queries", "n", "rc", "cpus", "sf", "drift_flagged")
+  private val meta = Set("value", "n_queries", "n", "rc", "cpus", "sf", "drift_flagged",
+    "warmup", "sweep1", "sweep2") // the last three: Bench's codegen_compiles counts
 
   /** Parse a previous round's full bench map (the `"name": seconds`
     * pairs) out of a JSON text, tolerating pretty-printed whitespace.

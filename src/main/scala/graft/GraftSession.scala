@@ -19,12 +19,42 @@ import org.apache.spark.sql.SparkSession
   *     under the 32-dir default — the round-6 medallion finding);
   *   - shuffle partitions sized to the given parallelism rather than
   *     the 200 default (a local/parallelism-proportional count; on a
-  *     real cluster pass the executor-core total).
+  *     real cluster pass the executor-core total);
+  *   - Spark's compiled-code cache sized to the registry's working set
+  *     ([[codegenCache]]).
   *
   * The harness mains (Bench/Verify/…) build their sessions through
   * [[Harness]] — their confs are part of the measured/driver contract;
   * this entry point is for LIBRARY users. */
 object GraftSession {
+
+  /** `spark.sql.codegen.cache.maxEntries`: how many generated classes
+    * Spark keeps compiled. Both session paths read this one pair: the
+    * fresh-session branch of [[create]] and the base map of
+    * `Harness.confs`.
+    *
+    * Derived from the working set, not an option. One full registry
+    * sweep compiles 3,150 distinct classes: `graft.Bench` over sf0.01
+    * (256 queries), warm-up 9 plus first timed sweep 3,141, read as the
+    * `CodegenMetrics.METRIC_COMPILATION_TIME` count delta that Bench
+    * writes to `bench_result.json` as `codegen_compiles`. Its second
+    * sweep, under a cache larger than that, still compiled 74: code
+    * that differs from run to run, which never hits. Headroom rule: the
+    * smallest power of two at or above 1.25 × the working set. Spark's
+    * cache is a Guava cache in 4 segments, each evicting at a quarter
+    * of the bound, so the fullest segment must hold its share of the
+    * working set (about 1.1 × the mean at 3,150 entries) plus the
+    * classes that never hit. At Spark's default of 100 entries every
+    * warm sweep of the perfbench query mix (about 160 classes)
+    * compiled, and JIT-compiled, its whole code again.
+    *
+    * The conf is static and the cache is JVM-global: `CodeGenerator`
+    * builds it once, with the size in force under the first session
+    * that generates code. A session [[create]] inherits keeps whatever
+    * size its JVM already has; a spark-submit'd app sets it with
+    * `--conf spark.sql.codegen.cache.maxEntries=4096`. */
+  val codegenCache: (String, String) =
+    "spark.sql.codegen.cache.maxEntries" -> "4096"
 
   /** Recommended session. `parallelism` sizes both the local-fallback
     * master and the shuffle partition count. Master resolution, in
@@ -47,7 +77,10 @@ object GraftSession {
     * cluster session's shuffle parallelism to this machine's CPU count
     * and its timezone to UTC mid-flight. An inherited session keeps its
     * owner's tuning; only a session create() itself builds gets the
-    * graft defaults. */
+    * graft defaults. The codegen cache size ([[codegenCache]]) could
+    * not be applied here even if it were wanted: it is a static conf,
+    * and the JVM's cache was already built under the inherited
+    * session. */
   def create(parallelism: Int = Runtime.getRuntime.availableProcessors(),
       master: Option[String] = None,
       appName: String = "graft"): SparkSession = {
@@ -78,6 +111,7 @@ object GraftSession {
           .config("spark.sql.session.timeZone", "UTC")
           .config("spark.sql.shuffle.partitions", parallelism.toString)
           .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "1024")
+          .config(codegenCache._1, codegenCache._2)
         master match {
           case Some(m) => b.master(m)
           case None if sys.props.get("spark.master").isEmpty =>

@@ -38,6 +38,12 @@ class BenchDriftSpec extends AnyFunSuite {
     assert(prev === Map("q01_gold_agg" -> 0.329, "d20_bpe_pairs" -> 0.266))
   }
 
+  test("parseBaseline skips the codegen_compiles counts bench_result.json carries") {
+    val full = """{"metric":"total","value":1.0,"unit":"sec","queries":{"q01_gold_agg":0.329},""" +
+      """"drift":{},"codegen_compiles":{"warmup":41,"sweep1":2900,"sweep2":3},"sf":"x"}"""
+    assert(BenchDrift.parseBaseline(full) === Map("q01_gold_agg" -> 0.329))
+  }
+
   test("the gate FIRES: an inflated query vs the pretty baseline is flagged") {
     val prev = BenchDrift.parseBaseline(prettyBaseline)
     val results = Seq(

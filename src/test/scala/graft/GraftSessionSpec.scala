@@ -21,6 +21,7 @@ class GraftSessionSpec extends AnyFunSuite {
       assert(s.conf.get("spark.sql.session.timeZone") == "UTC")
       assert(s.conf.get("spark.sql.shuffle.partitions") == "2")
       assert(s.conf.get("spark.sql.adaptive.enabled") == "true")
+      assert(s.conf.get(GraftSession.codegenCache._1) == GraftSession.codegenCache._2)
       // SQL function surface present
       assert(s.sql("SELECT graft_md5_upper('x') AS h").count() == 1L)
       // both guards live

@@ -12,7 +12,17 @@ class HarnessSpec extends AnyFunSuite {
       "spark.sql.shuffle.partitions" -> "3",
       "spark.sql.session.timeZone" -> "UTC",
       "spark.sql.adaptive.enabled" -> "true",
-      "spark.ui.enabled" -> "false"))
+      "spark.ui.enabled" -> "false",
+      "spark.sql.codegen.cache.maxEntries" -> "4096"))
+  }
+
+  test("Harness and GraftSession take the codegen cache size from one constant") {
+    assert(Harness.confs(2).get(GraftSession.codegenCache._1).contains(GraftSession.codegenCache._2))
+    // the conf key is spelled once in the library: GraftSession's fresh
+    // branch and Harness.confs both read the pair, never a literal
+    val key = GraftSession.codegenCache._1
+    val holders = mainSources.collect { case (n, src) if src.contains(key) => n }.toSet
+    assert(holders == Set("GraftSession.scala"))
   }
 
   test("Verify raises the recursive-CTE row limit to 50M on top of the base confs") {
@@ -26,16 +36,21 @@ class HarnessSpec extends AnyFunSuite {
     assert(c("spark.master") == "local[4]")
   }
 
-  test("no main builds its own session or force: only Harness and GraftSession call the builder") {
+  /** (file name, text) of every library source. */
+  private lazy val mainSources: Seq[(String, String)] = {
     val mainSrc = new java.io.File("src/main/scala")
     assert(mainSrc.isDirectory, s"src/main/scala not found from ${new java.io.File(".").getAbsolutePath}")
     def scalaFiles(f: java.io.File): Seq[java.io.File] =
       if (f.isDirectory) Option(f.listFiles).toSeq.flatten.flatMap(scalaFiles)
       else if (f.getName.endsWith(".scala")) Seq(f)
       else Nil
-    val sources = scalaFiles(mainSrc).map { f =>
+    scalaFiles(mainSrc).map { f =>
       f.getName -> new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
     }
+  }
+
+  test("no main builds its own session or force: only Harness and GraftSession call the builder") {
+    val sources = mainSources
     assert(sources.exists(_._1 == "Harness.scala"))
     val builders = sources.collect {
       case (n, src) if src.contains("SparkSession.builder()") => n

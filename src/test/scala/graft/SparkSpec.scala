@@ -6,7 +6,9 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all suites (getOrCreate → one JVM-wide
-  * session, so suite order doesn't multiply startup cost). */
+  * session, so suite order doesn't multiply startup cost). It carries
+  * the library's codegen cache size, so the suites run under the cache
+  * the mains and library users get. */
 object TestSpark {
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -14,6 +16,7 @@ object TestSpark {
     .config("spark.sql.shuffle.partitions", "4")
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
+    .config(GraftSession.codegenCache._1, GraftSession.codegenCache._2)
     .getOrCreate()
 }
 
