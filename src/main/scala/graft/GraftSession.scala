@@ -21,7 +21,9 @@ import org.apache.spark.sql.SparkSession
   *     the 200 default (a local/parallelism-proportional count; on a
   *     real cluster pass the executor-core total);
   *   - Spark's compiled-code cache sized to the registry's working set
-  *     ([[codegenCache]]).
+  *     ([[codegenCache]]);
+  *   - a `file:` filesystem that sets permissions without forking a
+  *     process ([[localFileSystem]]).
   *
   * The harness mains (Bench/Verify/…) build their sessions through
   * [[Harness]] — their confs are part of the measured/driver contract;
@@ -56,6 +58,30 @@ object GraftSession {
   val codegenCache: (String, String) =
     "spark.sql.codegen.cache.maxEntries" -> "4096"
 
+  /** `spark.hadoop.fs.file.impl`: the class Hadoop builds for `file:`
+    * paths, [[NoForkLocalFileSystem]]. The same three places read it as
+    * [[codegenCache]]: the fresh-session branch of [[create]],
+    * `Harness.confs` and the test session.
+    *
+    * Derived, not an option. Without the native `libhadoop`
+    * (`NativeIO.isAvailable` false), Hadoop's `RawLocalFileSystem` sets
+    * the permission of every file it creates (the data file and its
+    * `.crc`) and every directory it makes by forking a `chmod` process.
+    * JFR's `jdk.ProcessStart` counted 906 forks in one full medallion
+    * run of the perfbench corpus (556 file, 350 directory; 19,000
+    * records in 84 partitions) and 39 in a one-partition recompute. The
+    * cost is per file, not per byte: about 25–30 ms a file written. The
+    * replacement sets the same bits through `java.nio`, so the lake on
+    * disk is byte- and mode-identical.
+    *
+    * Hadoop's `FileSystem` cache is JVM-global, and the first `file:`
+    * instance built in the JVM decides the class every later `file:`
+    * lookup gets. A session [[create]] inherits keeps whatever its JVM
+    * already has; a spark-submit'd app sets it with
+    * `--conf spark.hadoop.fs.file.impl=graft.NoForkLocalFileSystem`. */
+  val localFileSystem: (String, String) =
+    "spark.hadoop.fs.file.impl" -> classOf[NoForkLocalFileSystem].getName
+
   /** Recommended session. `parallelism` sizes both the local-fallback
     * master and the shuffle partition count. Master resolution, in
     * order: an explicit `master` argument wins; otherwise a
@@ -77,10 +103,10 @@ object GraftSession {
     * cluster session's shuffle parallelism to this machine's CPU count
     * and its timezone to UTC mid-flight. An inherited session keeps its
     * owner's tuning; only a session create() itself builds gets the
-    * graft defaults. The codegen cache size ([[codegenCache]]) could
-    * not be applied here even if it were wanted: it is a static conf,
-    * and the JVM's cache was already built under the inherited
-    * session. */
+    * graft defaults. The codegen cache size ([[codegenCache]]) and the
+    * `file:` filesystem ([[localFileSystem]]) could not be applied here
+    * even if they were wanted: both are JVM-global and were already
+    * built under the inherited session. */
   def create(parallelism: Int = Runtime.getRuntime.availableProcessors(),
       master: Option[String] = None,
       appName: String = "graft"): SparkSession = {
@@ -112,6 +138,7 @@ object GraftSession {
           .config("spark.sql.shuffle.partitions", parallelism.toString)
           .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "1024")
           .config(codegenCache._1, codegenCache._2)
+          .config(localFileSystem._1, localFileSystem._2)
         master match {
           case Some(m) => b.master(m)
           case None if sys.props.get("spark.master").isEmpty =>

@@ -18,15 +18,17 @@ object Harness {
     sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt).getOrElse(default)
 
   /** local[cpus], shuffle partitions = cpus, UTC, UI off, the codegen
-    * cache size of [[GraftSession.codegenCache]], then the caller's
-    * extras (an extra wins on a key clash). */
+    * cache size of [[GraftSession.codegenCache]], the `file:` filesystem
+    * of [[GraftSession.localFileSystem]], then the caller's extras (an
+    * extra wins on a key clash). */
   def confs(cpus: Int, extra: (String, String)*): Map[String, String] =
     Map(
       "spark.master" -> s"local[$cpus]",
       "spark.sql.shuffle.partitions" -> cpus.toString,
       "spark.sql.session.timeZone" -> "UTC",
       "spark.ui.enabled" -> "false",
-      GraftSession.codegenCache) ++ extra
+      GraftSession.codegenCache,
+      GraftSession.localFileSystem) ++ extra
 
   /** q60's recursion emits one row per orders row; Spark's default 1M-row
     * guardrail trips on corpora ≥ ~sf0.7. The limit is a safety net

@@ -57,4 +57,27 @@ object GastosSchema {
   val envelope: StructType = envelopeOf(raw)
 
   val partitionColumns: Seq[String] = Seq("ano", "mes")
+
+  /** How a layer reads back: its data fields in file order, then the
+    * `ano`/`mes` hive partition columns as Int. Every field is nullable,
+    * as Spark writes every parquet column. A declared read infers
+    * nothing, so it launches no schema-inference job. */
+  private def layer(data: Seq[StructField]): StructType =
+    StructType(data ++ partitionColumns.map(StructField(_, IntegerType)))
+
+  private val rawData: Seq[StructField] = raw.filterNot(f => partitionColumns.contains(f.name))
+
+  /** Bronze: the raw record as written, `valor` and dates still strings. */
+  val bronze: StructType = layer(rawData)
+
+  /** Silver: bronze after `Cleaning`: `valor` Double, `data_pagamento` Date. */
+  val silver: StructType = layer(rawData.map {
+    case f if f.name == "valor" => f.copy(dataType = DoubleType)
+    case f if f.name == "data_pagamento" => f.copy(dataType = DateType)
+    case f => f
+  })
+
+  /** Gold: one `total_gasto` per (ano, mes, nome_orgao). */
+  val gold: StructType = layer(Seq(
+    StructField("nome_orgao", StringType), StructField("total_gasto", DoubleType)))
 }

@@ -2,6 +2,7 @@ package graft.etl
 
 import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** O1/O2 — the reference's linear pipeline driver (main.py:326-334):
   * fetch → bronze → silver → gold, sequential, fail-soft (each stage
@@ -18,6 +19,12 @@ import org.apache.spark.sql.functions._
   * partition by a per-leaf swap. The published path is absent between
   * `swapInto`'s two renames, and a multi-partition recompute is not
   * atomic across partitions.
+  *
+  * Silver and gold read their input layer under its declared schema
+  * (`GastosSchema.bronze`/`silver`), so no stage pays a schema-inference
+  * job. A column outside the declared schema is not carried forward; a
+  * declared column the files lack reads as null, and the silver gate's
+  * `not_null` checks reject it before anything is published.
   */
 object Pipeline {
 
@@ -53,8 +60,8 @@ object Pipeline {
     *           any data becomes visible), then date parse, write — the
     *           gate is the audit of the staging write (metrics observed
     *           during that ONE pass) instead of a separate gate scan;
-    *   gold    (main.py:270-323): require {ano,mes,nome_orgao,valor},
-    *           group-sum to total_gasto, write.
+    *   gold    (main.py:270-323): group-sum valor to total_gasto per
+    *           (ano, mes, nome_orgao), write.
     */
   def medallion(rawGlob: String, bronzePath: String, silverPath: String,
       goldPath: String): Seq[Stage] = Seq(
@@ -89,8 +96,8 @@ object Pipeline {
   private def silverStage(name: String, bronzePath: String, silverPath: String,
       partitions: Option[Seq[(Int, Int)]]): Stage =
     Stage(name, { spark =>
-      val cleaned = Cleaning.silverClean(readLayer(spark, bronzePath, partitions))
-      Quality.requireColumns(cleaned, Seq("ano", "mes", "nome_orgao", "nome_favorecido"))
+      val cleaned = Cleaning.silverClean(
+        readLayer(spark, bronzePath, GastosSchema.bronze, partitions))
       // the gate columns (ano/mes/nome_*/valor) are untouched by the
       // date parse, so auditing the dated frame == gating the cleaned one
       val dated = Cleaning.parseDate(cleaned, "data_pagamento")
@@ -102,16 +109,15 @@ object Pipeline {
   private def goldStage(name: String, silverPath: String, goldPath: String,
       partitions: Option[Seq[(Int, Int)]]): Stage =
     Stage(name, { spark =>
-      val silver = readLayer(spark, silverPath, partitions)
-      Quality.requireColumns(silver, Seq("ano", "mes", "nome_orgao", "valor"))
+      val silver = readLayer(spark, silverPath, GastosSchema.silver, partitions)
       val gold = Aggregates.goldAggregate(silver)
         .select(col("ano"), col("mes"), col("nome_orgao"), col("total_gasto"))
       Map("rows_written" -> publish(gold, goldPath, partitions, "silver", () => ()))
     })
 
-  private def readLayer(spark: SparkSession, path: String,
+  private def readLayer(spark: SparkSession, path: String, schema: StructType,
       partitions: Option[Seq[(Int, Int)]]): DataFrame = {
-    val layer = Sources.readParquetLayer(spark, path)
+    val layer = Sources.readParquetLayer(spark, path, schema)
     partitions.fold(layer)(ps => layer.where(ps
       .map { case (ano, mes) => col("ano") === ano && col("mes") === mes }
       .reduce(_ || _)))
@@ -131,7 +137,7 @@ object Pipeline {
         Sinks.publishAuditedPartitions(
           df.observe(written, collect_set(struct(col("ano"), col("mes"))).as("partitions")),
           path, { () =>
-            // partition discovery types ano/mes Int, silverClean Long
+            // the declared layer schemas type ano/mes Int, silverClean Long
             val present = written.get("partitions").asInstanceOf[scala.collection.Seq[Row]]
               .map(r => (r.getAs[Number](0).intValue, r.getAs[Number](1).intValue)).toSet
             val empty = requested.filterNot(present.contains)

@@ -2,6 +2,7 @@ package graft.etl
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Readers (SURVEY.md §2.1 S5/S6/S8).
   *
@@ -40,7 +41,10 @@ object Sources {
 
   /** S8/S9: partitioned parquet scan with hive partition discovery —
     * Spark does natively what pd.read_parquet / pyarrow ds.dataset do in
-    * the reference (main.py:198, 283-286). */
-  def readParquetLayer(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    * the reference (main.py:198, 283-286) — under a declared schema
+    * (GastosSchema.bronze/silver/gold), so no job samples the footers.
+    * A column the files lack reads as null; one the schema lacks is not
+    * read. */
+  def readParquetLayer(spark: SparkSession, path: String, schema: StructType): DataFrame =
+    spark.read.schema(schema).parquet(path)
 }

@@ -22,6 +22,11 @@ class GraftSessionSpec extends AnyFunSuite {
       assert(s.conf.get("spark.sql.shuffle.partitions") == "2")
       assert(s.conf.get("spark.sql.adaptive.enabled") == "true")
       assert(s.conf.get(GraftSession.codegenCache._1) == GraftSession.codegenCache._2)
+      assert(s.conf.get(GraftSession.localFileSystem._1) == classOf[NoForkLocalFileSystem].getName)
+      // the Hadoop conf its file reads and writes use resolves file: to
+      // the filesystem that sets permissions without forking
+      assert(org.apache.hadoop.fs.FileSystem.getFileSystemClass(
+        "file", s.sessionState.newHadoopConf()) == classOf[NoForkLocalFileSystem])
       // SQL function surface present
       assert(s.sql("SELECT graft_md5_upper('x') AS h").count() == 1L)
       // both guards live

@@ -13,7 +13,16 @@ class HarnessSpec extends AnyFunSuite {
       "spark.sql.session.timeZone" -> "UTC",
       "spark.sql.adaptive.enabled" -> "true",
       "spark.ui.enabled" -> "false",
-      "spark.sql.codegen.cache.maxEntries" -> "4096"))
+      "spark.sql.codegen.cache.maxEntries" -> "4096",
+      "spark.hadoop.fs.file.impl" -> "graft.NoForkLocalFileSystem"))
+  }
+
+  test("Harness and GraftSession take the file: filesystem from one constant") {
+    assert(Harness.confs(2).get(GraftSession.localFileSystem._1)
+      .contains(classOf[NoForkLocalFileSystem].getName))
+    val key = GraftSession.localFileSystem._1
+    val holders = mainSources.collect { case (n, src) if src.contains(key) => n }.toSet
+    assert(holders == Set("GraftSession.scala"))
   }
 
   test("Harness and GraftSession take the codegen cache size from one constant") {

@@ -4,11 +4,13 @@ import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** Shared local session for all suites (getOrCreate → one JVM-wide
   * session, so suite order doesn't multiply startup cost). It carries
-  * the library's codegen cache size, so the suites run under the cache
-  * the mains and library users get. */
+  * the library's codegen cache size and `file:` filesystem, so the
+  * suites run under the cache and the writes the mains and library
+  * users get. */
 object TestSpark {
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -17,6 +19,7 @@ object TestSpark {
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
     .config(GraftSession.codegenCache._1, GraftSession.codegenCache._2)
+    .config(GraftSession.localFileSystem._1, GraftSession.localFileSystem._2)
     .getOrCreate()
 }
 
@@ -48,5 +51,23 @@ abstract class SparkSpec extends AnyFunSuite {
         sc.removeSparkListener(listener)
       }
     (result, jobs.get)
+  }
+
+  /** `body`'s result and the number of processes the JVM started while
+    * it ran (JFR's `jdk.ProcessStart`). */
+  def forksDuring[A](body: => A): (A, Int) = {
+    val recording = new jdk.jfr.Recording()
+    val dump = java.nio.file.Files.createTempFile("forks", ".jfr")
+    try {
+      recording.enable("jdk.ProcessStart")
+      recording.start()
+      val result = try body finally recording.stop()
+      recording.dump(dump)
+      val events = jdk.jfr.consumer.RecordingFile.readAllEvents(dump)
+      (result, events.asScala.count(_.getEventType.getName == "jdk.ProcessStart"))
+    } finally {
+      recording.close()
+      java.nio.file.Files.deleteIfExists(dump)
+    }
   }
 }

@@ -175,9 +175,9 @@ class PipelineSpec extends SparkSpec {
     assert(silverAfter == silverBefore)
   }
 
-  /** A lake built by one full run over three partitions: 2011/1, 2011/2
-    * and 2012/1. Returns its root. */
-  private def threePartitionLake(prefix: String): String = {
+  /** A fresh root whose `raw` holds one page of three records, in
+    * partitions 2011/1, 2011/2 and 2012/1. */
+  private def threePartitionRaw(prefix: String): String = {
     val root = tmpDir(prefix)
     val rawDir = Paths.get(root, "raw"); Files.createDirectories(rawDir)
     val page = s"""{"count": 3, "next": null, "previous": null, "results": [
@@ -186,6 +186,13 @@ class PipelineSpec extends SparkSpec {
       ${record(2012, 1, "orgao b", "fav", "30.00")}]}"""
     Files.write(rawDir.resolve("gastos-diretos_gastos_page_1.json"),
       page.getBytes(StandardCharsets.UTF_8))
+    root
+  }
+
+  /** A lake built by one full run over [[threePartitionRaw]]'s page.
+    * Returns its root. */
+  private def threePartitionLake(prefix: String): String = {
+    val root = threePartitionRaw(prefix)
     val full = Pipeline.run(spark, Pipeline.medallion(
       s"$root/raw/*.json", s"$root/bronze", s"$root/silver", s"$root/gold"))
     assert(full.forall(_.ok), full.mkString("; "))
@@ -229,12 +236,46 @@ class PipelineSpec extends SparkSpec {
       s"$root/raw/*.json", s"$root/bronze", s"$root/silver", s"$root/gold"))
     val incr = jobsPerStage(Pipeline.incrementalSilverGold(
       s"$root/bronze", s"$root/silver", s"$root/gold", Seq((2011, 1))))
-    // bronze: the write; silver: schema inference + the write; gold:
-    // schema inference + groupBy's shuffle + the write. The recompute
-    // checks its partitions on the write itself, at no extra job.
+    // bronze and silver: the write; gold: groupBy's shuffle + the
+    // write. Layers are read under their declared schemas, so no stage
+    // runs a schema-inference job, and the recompute checks its
+    // partitions on the write itself, at no extra job.
     assert((full, incr) == ((
-      Seq("raw_to_bronze" -> 1, "bronze_to_silver" -> 2, "silver_to_gold" -> 3),
-      Seq("bronze_to_silver_incremental" -> 2, "silver_to_gold_incremental" -> 3))))
+      Seq("raw_to_bronze" -> 1, "bronze_to_silver" -> 1, "silver_to_gold" -> 2),
+      Seq("bronze_to_silver_incremental" -> 1, "silver_to_gold_incremental" -> 2))))
+  }
+
+  test("declared layer schemas equal what Spark infers from the written layers") {
+    val root = threePartitionLake("pipeline-schemas")
+    for ((layer, declared) <- Seq("bronze" -> GastosSchema.bronze,
+        "silver" -> GastosSchema.silver, "gold" -> GastosSchema.gold))
+      assert(spark.read.parquet(s"$root/$layer").schema == declared, layer)
+  }
+
+  test("a bronze without nome_orgao fails the silver gate and publishes nothing") {
+    val root = threePartitionLake("pipeline-no-orgao")
+    // the declared read turns the missing column into nulls for the gate
+    Sinks.writePartitioned(spark.read.parquet(s"$root/bronze").drop("nome_orgao"),
+      s"$root/bronze-no-orgao")
+    val silver = s"$root/silver-no-orgao"
+    val stages = Pipeline.medallion(s"$root/raw/*.json", s"$root/bronze-no-orgao", silver,
+      s"$root/gold-no-orgao").filter(_.name == "bronze_to_silver")
+    val e = intercept[Quality.QualityException] { Pipeline.run(spark, stages, failFast = true) }
+    assert(e.failures.keySet.contains("not_null(nome_orgao)"), e.failures)
+    for (residue <- Seq("", ".staging", ".old"))
+      assert(!Files.exists(Paths.get(silver + residue)), silver + residue)
+  }
+
+  test("a full run and a one-partition recompute fork no process") {
+    val root = threePartitionRaw("pipeline-forks")
+    val (results, forks) = forksDuring {
+      Pipeline.run(spark, Pipeline.medallion(
+        s"$root/raw/*.json", s"$root/bronze", s"$root/silver", s"$root/gold")) ++
+        Pipeline.run(spark, Pipeline.incrementalSilverGold(
+          s"$root/bronze", s"$root/silver", s"$root/gold", Seq((2011, 1))))
+    }
+    assert(results.forall(_.ok), results.mkString("; "))
+    assert(forks == 0)
   }
 
   test("Pipeline publishes only through write-audit-publish; no dynamic overwrite remains") {

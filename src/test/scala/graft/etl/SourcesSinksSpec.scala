@@ -40,15 +40,16 @@ class SourcesSinksSpec extends SparkSpec {
     val path = tmpDir("sink") + "/bronze"
     Sinks.writePartitioned(df, path)
     assert(Files.isDirectory(Paths.get(path, "ano=2011", "mes=1")))
-    val back = Sources.readParquetLayer(spark, path)
+    val schema = spark.read.parquet(path).schema
+    val back = Sources.readParquetLayer(spark, path, schema)
     assert(back.count() == 2)
     assert(back.select("ano").distinct().collect().head.get(0) == 2011)
     // append accumulates (the reference's de-facto mode, SURVEY §1.4.4) ...
     Sinks.writePartitioned(df, path, mode = "append")
-    assert(Sources.readParquetLayer(spark, path).count() == 4)
+    assert(Sources.readParquetLayer(spark, path, schema).count() == 4)
     // ... overwrite resets
     Sinks.writePartitioned(df, path, mode = "overwrite")
-    assert(Sources.readParquetLayer(spark, path).count() == 2)
+    assert(Sources.readParquetLayer(spark, path, schema).count() == 2)
   }
 
   test("publishAuditedPartitions with EMPTY partitionBy swaps the whole table root") {
