@@ -24,13 +24,13 @@ class NoForkLocalFileSystemSpec extends SparkSpec {
       mode(file)
     })
     assert(onDisk == modes)
-    assert(forks == 0)
+    assert(forks.isEmpty, forks)
     // java.nio cannot set the sticky bit, so Hadoop's chmod must run
     val sticky = 0x3ff // 01777
     val (_, stickyForks) = forksDuring(
       fs.setPermission(new Path(dir.toUri), new FsPermission(sticky.toShort)))
     assert(mode(dir) == sticky)
-    assert(stickyForks == (if (NativeIO.isAvailable) 0 else 1))
+    assert(stickyForks.size == (if (NativeIO.isAvailable) 0 else 1), stickyForks)
     Harness.deleteRecursively(dir.toFile)
   }
 
@@ -48,15 +48,15 @@ class NoForkLocalFileSystemSpec extends SparkSpec {
       }.toMap
       finally all.close()
     }
-    def write(layer: JPath, options: Map[String, String]): Int =
+    def write(layer: JPath, options: Map[String, String]): Seq[String] =
       forksDuring(df.write.options(options).partitionBy("ano", "mes").parquet(layer.toString))._2
     val noFork = write(root.resolve("nofork"), Map.empty)
     // write options reach the job's Hadoop conf; with the cache off the
     // write builds Hadoop's own class
     val plain = write(root.resolve("plain"), Map(
       "fs.file.impl" -> classOf[LocalFileSystem].getName, "fs.file.impl.disable.cache" -> "true"))
-    assert(noFork == 0)
-    if (!NativeIO.isAvailable) assert(plain > 0) // Hadoop's path forked chmod
+    assert(noFork.isEmpty, noFork)
+    if (!NativeIO.isAvailable) assert(plain.nonEmpty) // Hadoop's path forked chmod
     val expected = modes(root.resolve("plain"))
     assert(expected.values.exists(_._1) && expected.keys.exists(_.endsWith(".parquet.crc")))
     assert(modes(root.resolve("nofork")) == expected)

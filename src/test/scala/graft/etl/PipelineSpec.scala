@@ -275,7 +275,7 @@ class PipelineSpec extends SparkSpec {
           s"$root/bronze", s"$root/silver", s"$root/gold", Seq((2011, 1))))
     }
     assert(results.forall(_.ok), results.mkString("; "))
-    assert(forks == 0)
+    assert(forks.isEmpty, forks)
   }
 
   test("Pipeline publishes only through write-audit-publish; no dynamic overwrite remains") {
